@@ -26,8 +26,10 @@ DRIVER_MEM = "2g"
 class Run:
     """One benchmark run: its directories, tracer and session."""
 
-    def __init__(self, out: str, workload: str, seed: int, seconds: int, trace: bool):
+    def __init__(self, out: str, workload: str, seed: int, seconds: int, trace: bool,
+                 cores: int = CORES):
         self.out = out
+        self.cores = cores
         self.seed, self.seconds = seed, seconds
         self.tracer = Tracer(trace, f"{workload}-{seed}")
         self.spark: SparkSession | None = None
@@ -51,10 +53,10 @@ class Run:
             self.spark.stop()
         self.spark = build_spark(
             app_name="perfbench",
-            master=master or f"local[{CORES}]",
+            master=master or f"local[{self.cores}]",
             **{
                 "spark.driver.memory": DRIVER_MEM,
-                "spark.sql.shuffle.partitions": str(CORES),
+                "spark.sql.shuffle.partitions": str(self.cores),
                 "spark.executorEnv.PYTHONPATH": os.environ["PYTHONPATH"],
                 "spark.local.dir": os.path.join(self.out, "spark-local"),
                 "spark.sql.warehouse.dir": os.path.join(self.out, "warehouse"),

@@ -4,7 +4,6 @@ corpus, and IVF-PQ retrieval of a query batch with an MMR re-rank."""
 from __future__ import annotations
 
 import os
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 
@@ -118,28 +117,22 @@ def _recall(d: str, got: dict[int, set[int]]) -> float:
     return hits / (len(top) * MMR_N_CAND)
 
 
-def start_oracle(d: str):
-    """Start the ``curate_corpus`` DuckDB oracle in the background — it is
-    slow (a recursive CTE), so it runs beside the engine's untimed check
-    passes, on two threads so the engine keeps most of the cores. Returns
-    (connection, thread)."""
+def oracle(d: str):
+    """The ``curate_corpus`` DuckDB oracle over the generated documents,
+    as table ``oracle`` of the returned connection. It is slow (a recursive
+    CTE), so it runs with the inputs, before the engine starts, and takes
+    no core from the engine's passes."""
     load_all_plans()
-    con = duckdb.connect(config={"threads": 2})
+    con = duckdb.connect(config={"threads": os.cpu_count() or 1})
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{d}/documents.parquet'")
-    thread = threading.Thread(
-        target=lambda cur: cur.execute(
-            f"CREATE TABLE oracle AS {REGISTRY['curate_corpus'].oracle}"
-        ),
-        args=(con.cursor(),),
-    )
-    thread.start()
-    return con, thread
+    con.execute(f"CREATE TABLE oracle AS {REGISTRY['curate_corpus'].oracle}")
+    return con
 
 
-def check(run, d: str, oracle) -> tuple[list[str], float]:
-    """Curation against the oracle started by ``start_oracle``; retrieval
-    recall against exact top-k; MMR picks. Returns (problems, recall)."""
-    con, thread = oracle
+def check(run, d: str, con) -> tuple[list[str], float]:
+    """Curation against the oracle table of ``con`` (see ``oracle``);
+    retrieval recall against exact top-k; MMR picks. Returns (problems,
+    recall)."""
     docs, emb, queries = _inputs(run, d)
     # curation and retrieval build no catalog query (whose build would
     # release the other's cached frames), so they run side by side
@@ -148,7 +141,6 @@ def check(run, d: str, oracle) -> tuple[list[str], float]:
         curated = pool.submit(write_for_diff, _curate(docs), path)
         problems, recall = _check_retrieval(d, emb, queries)
         columns = curated.result()
-    thread.join()
     problems += oracle_diff(path, columns, con, "SELECT * FROM oracle", "curate_corpus")
     con.close()
     release_deferred()

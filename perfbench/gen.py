@@ -101,7 +101,10 @@ def corpus(seed: int, n_docs: int, exact_share: float = 0.2, near_share: float =
     """``documents`` rows: base docs of 10-90 tokens, then exact copies
     and near copies (about 5 % of tokens replaced) of earlier docs.
     Foreign docs carry another language's marker words so the language
-    gate has work to reject."""
+    gate has work to reject. Each exact copy has a base doc of its own and
+    near copies come two to a base doc, so every near-duplicate cluster
+    has three members: the dedup operators' work, down to the number of
+    connected-components rounds, is the same for every seed."""
     rng = np.random.default_rng(seed)
     n_exact = int(n_docs * exact_share)
     n_near = int(n_docs * near_share)
@@ -119,12 +122,11 @@ def corpus(seed: int, n_docs: int, exact_share: float = 0.2, near_share: float =
             lang = "xx"
         texts.append(" ".join(toks))
         langs.append(lang)
-    for _ in range(n_exact):
-        src = int(rng.integers(0, n_base))
+    srcs = rng.choice(n_base, size=n_exact + (n_near + 1) // 2, replace=False)
+    for src in srcs[:n_exact]:
         texts.append(texts[src])
         langs.append(langs[src])
-    for _ in range(n_near):
-        src = int(rng.integers(0, n_base))
+    for src in np.repeat(srcs[n_exact:], 2)[:n_near]:
         toks = texts[src].split()
         n_edit = max(1, round(len(toks) * 0.05))
         for j in rng.choice(len(toks), size=n_edit, replace=False):

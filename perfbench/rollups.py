@@ -34,6 +34,8 @@ MIX = (
     "events_funnel_conversion",
     "stream_tumbling_events",
 )
+# the streaming query of the mix: a dashboard's live tile
+STREAM_TILE = "stream_tumbling_events"
 
 
 def prepare(run) -> str:
@@ -59,9 +61,9 @@ def check(run, sf_dir: str) -> list[str]:
         columns = write_for_diff(REGISTRY[name].fn(run.spark, sf_dir), path)
         return oracle_diff(path, columns, con.cursor(), REGISTRY[name].oracle, name)
 
-    problems = one("stream_tumbling_events")
+    problems = one(STREAM_TILE)
     with ThreadPoolExecutor(max_workers=len(MIX) - 1) as pool:
-        for found in pool.map(one, [n for n in MIX if n != "stream_tumbling_events"]):
+        for found in pool.map(one, [n for n in MIX if n != STREAM_TILE]):
             problems += found
     release_deferred()
     con.close()

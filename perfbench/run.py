@@ -26,11 +26,16 @@ code is nonzero when a check fails or the run errors.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
+import subprocess
 import sys
+import time
 import traceback
+from multiprocessing import resource_tracker
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -61,6 +66,60 @@ def _pin_environment(out: str) -> None:
         sys.path.insert(1, ROOT)
 
 
+def _become_subreaper() -> None:
+    """Orphaned descendants (Python workers whose JVM has exited) are
+    re-parented to this process instead of init, so ``_end_processes``
+    can wait for them."""
+    PR_SET_CHILD_SUBREAPER = 36
+    ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+
+
+def _child_pids() -> list[int]:
+    me, kids = os.getpid(), []
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as f:
+                    if int(f.read().rsplit(")", 1)[1].split()[1]) == me:
+                        kids.append(int(entry))
+            except (OSError, IndexError, ValueError):
+                pass
+    return kids
+
+
+def _end_processes(grace_s: float = 20.0) -> None:
+    """End every process the run started and wait until each has ended:
+    the JVM (it exits when its stdin closes), multiprocessing's resource
+    tracker, and any other child or orphaned descendant. Whatever is left
+    after ``grace_s`` is killed."""
+    sc = getattr(sys.modules.get("pyspark"), "SparkContext", None)
+    gateway = getattr(sc, "_gateway", None)
+    if gateway is not None:
+        try:
+            gateway.shutdown()
+        except Exception:
+            traceback.print_exc()
+        proc = getattr(gateway, "proc", None)
+        if proc is not None:
+            proc.stdin.close()
+            try:
+                proc.wait(timeout=grace_s)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+    resource_tracker._resource_tracker._stop()
+    deadline = time.monotonic() + grace_s
+    while kids := _child_pids():
+        for pid in kids:
+            try:
+                if time.monotonic() > deadline:
+                    os.kill(pid, signal.SIGKILL)
+                os.waitpid(pid, os.WNOHANG)
+            except (ChildProcessError, ProcessLookupError):
+                pass
+        time.sleep(0.05)
+
+
 def _metric_specs() -> tuple[list[str], dict[str, str]]:
     """(per-layer metric names, unit of every metric) from BENCHMARK.json."""
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -77,6 +136,9 @@ def main() -> int:
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args()
+    _become_subreaper()
+    # a terminated run still tears down what it started, in ``finally``
+    signal.signal(signal.SIGTERM, lambda signum, _: sys.exit(128 + signum))
 
     out = os.path.join(HERE, "out", f"{args.workload}-{args.seed}-{args.trace}")
     shutil.rmtree(out, ignore_errors=True)
@@ -92,15 +154,16 @@ def main() -> int:
 
     run = world = report = None
     try:
-        from common import RssSampler, Run, median
+        from common import CORES, RssSampler, Run, median
         from world import World
 
         import ingest
         import readmix
 
-        run = Run(out, args.workload, args.seed, args.seconds, bool(args.trace))
-        world = World()
+        cores = readmix.CORES if args.workload == "read_mix" else CORES
+        run = Run(out, args.workload, args.seed, args.seconds, bool(args.trace), cores)
         if args.workload == "ingest":
+            world = World()
             register = ingest.register
             body = lambda: ingest.workload(run, world, register)  # noqa: E731
         else:
@@ -108,7 +171,7 @@ def main() -> int:
             register = lambda spark: readmix.register(spark, data)  # noqa: E731
             body = lambda: readmix.workload(run, data)  # noqa: E731
 
-        rss = RssSampler(exclude={world.pid}).start()
+        rss = RssSampler(exclude={world.pid} if world else set()).start()
         run.log("inputs ready")
         launch_s, setup_times = run.setup(register)
         run.log("set up")
@@ -157,6 +220,7 @@ def main() -> int:
                 traceback.print_exc()
         if world is not None:
             world.close()
+        _end_processes()
         # keep the artifacts, drop the inputs and scratch files
         for entry in os.listdir(out):
             if entry not in ("stderr.log", "result.json", "spans.json"):
