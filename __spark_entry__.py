@@ -69,7 +69,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # exists — VERDICT.md stayed the round-5 judge), so "latest committed
 # round + 1" under-counted and would have parked the keyed-7 flags
 # forever.
-_CURRENT_ROUND = 15
+_CURRENT_ROUND = 16
 
 _RESCORE_AFTER = {
     # r3 operator rewrites whose consumers got NO r3 driver row
@@ -148,7 +148,7 @@ _RESCORE_AFTER = {
     "dedup_semantic_prune": 6,
     "dedup_semantic_prune_scaled": 6,
     "dedup_semantic_prune_twolevel": 6,
-    #   streaming/kinesis_dev.py: _drain_shard extraction, adaptive
+    #   the driver-side dev poller: _drain_shard extraction, adaptive
     #   reads, fixpoint shard admission, executor-parallel mode
     "kinesis_incremental_consume": 6,
     # r7 changes, landed LATE in r6 (after r6's window was already
@@ -511,6 +511,24 @@ _RESCORE_AFTER = {
     "sim_lsh_topk": 15,
     "sim_ann_recall": 15,
     "dedup_embedding_pairs": 15,
+    # r16 changes (this round's window is being built now — ACTIVE):
+    #   plans/reference.py: the four Kinesis consume queries that ran on
+    #   the deleted driver-side poller / simple reader now run through
+    #   the one partitioned kinesis_py reader (a shared produce →
+    #   availableNow-per-wave helper on one checkpoint); same names and
+    #   oracles, new implementation — each gets a post-change row:
+    "kinesis_incremental_consume": 16,
+    "kinesis_parallel_consume": 16,
+    "kinesis_pysource_consume": 16,
+    "kinesis_pysource_latest_resume": 16,
+    #   streaming/kinesis_pysource.py (option parsing and shard listing
+    #   folded into the partitioned reader, one shared GetRecords paging
+    #   loop) and streaming/kinesis_fake.py (millisecond arrival stamps)
+    #   changed, and the three other consumers moved onto the same
+    #   plans/reference.py helpers — per the r2 lesson they rescore too:
+    "kinesis_pysource_batch_snapshot": 16,
+    "kinesis_pysource_partitioned_consume": 16,
+    "kinesis_pysource_reshard_resume": 16,
 }
 
 

@@ -91,13 +91,14 @@ BENCH_QUERIES = [
     "timeseries_rate_of_change",
     # r5: the two new non-trivial paths — full PNG encode+decode through
     # mapInPandas (the per-row python codec cost is the point), and the
-    # incremental Kinesis produce->poll->parse machinery
+    # incremental Kinesis produce->consume->parse machinery (three
+    # checkpointed kinesis_py runs — harness-roundtrip tier)
     "multimodal_image_decode",
     "kinesis_incremental_consume",
     # r6: the two new non-trivial paths — the banded-candidate tuning
-    # grid (3 settings sharing one exact ground truth), and the
-    # executor-parallel staged Kinesis consumption (mapInPandas shard
-    # fan-out + parquet staging + ledger-collect offsets)
+    # grid (3 settings sharing one exact ground truth), and
+    # executor-parallel Kinesis consumption (one kinesis_py task per
+    # shard, two checkpointed runs — harness-roundtrip tier)
     "dedup_minhash_tuning",
     "kinesis_parallel_consume",
     # r8: image-DIRECTORY ingest through the binaryFile source into the
@@ -137,7 +138,7 @@ BENCH_QUERIES = [
     # r9: LATEST initial position (two checkpointed availableNow runs +
     # a bounded <=1 s anchor-granularity wait — machinery cost, noted)
     # and executor-parallel STREAMING through the full
-    # DataSourceStreamReader (driver bounds probe + one task per shard)
+    # DataSourceStreamReader (metadata-only offsets + one task per shard)
     "kinesis_pysource_latest_resume",
     "kinesis_pysource_partitioned_consume",
     # r10: reshard lifecycle across a checkpoint boundary through the

@@ -157,123 +157,148 @@ def parse_typed_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return typed_measure_projection(pts)
 
 
-def _kinesis_produce_consume_roundtrip(
+def _produce_rendered_events_to_fake(
     spark: SparkSession,
     sf_dir: str,
+    producer,
+    stream_name: str,
     *,
     event_cap: int,
-    n_waves: int,
-    stream_name: str,
-    executor_parallel: bool,
-) -> DataFrame:
-    """Shared produce→poll→parse scaffold for the two Kinesis consume
-    queries: render ``events`` rows (event_id <= ``event_cap``) into the
-    generator's exact gzip'd service-log wire format
+    event_min: int | None = None,
+) -> None:
+    """Shared produce side of the Kinesis queries: render the
+    ``event_min < event_id <= event_cap`` events slice into the
+    generator's gzip'd service-log wire format
     (timestream_kinesis_data_gen.py:24-36, 75-78; partition key =
-    account id), produce them in ``n_waves`` waves to a 4-shard
-    in-process fake endpoint (real boto3 wire protocol, 500-record
-    PutRecords chunks), consume each wave with one incremental
-    ``KinesisMicroBatchPoller`` poll+commit, and parse the union back
-    into points.
-
-    ``executor_parallel`` picks the consumption mode AND the checkpoint
-    lifetime: the driver-side poller's rows are in memory, so its
-    checkpoint is removed as soon as the polls finish; the parallel
-    poller's returned frame READS the staged parquet, so cleanup is
-    handed to ``defer_release`` — the same deferred-consumption
-    contract plan-level caches follow.
-    """
+    account id) and put it to the fake stream in 500-record chunks (the
+    PutRecords API cap). The first wave (no ``event_min``) creates the
+    4-shard stream; a LATER wave (``event_min`` set) goes to the
+    existing one."""
     import gzip as _gzip
+
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") <= event_cap)
+    if event_min is not None:
+        e = e.filter(F.col("event_id") > event_min)
+    rendered = e.select(
+        *_render_service_log(
+            [F.lpad(F.col("user_id").cast("string"), 12, "0").alias("pk")]
+        )
+    ).collect()
+    if event_min is None:
+        producer.create_stream(StreamName=stream_name, ShardCount=4)
+    recs = [
+        {"Data": _gzip.compress(r["value"].encode()), "PartitionKey": r["pk"]}
+        for r in rendered
+    ]
+    for i in range(0, len(recs), 500):
+        producer.put_records(StreamName=stream_name, Records=recs[i : i + 500])
+
+
+def _fake_producer(fk):
+    import boto3
+
+    return boto3.client(
+        "kinesis",
+        endpoint_url=fk.endpoint_url,
+        region_name="us-east-1",
+        aws_access_key_id="test",
+        aws_secret_access_key="test",
+    )
+
+
+def _kinesis_py_options(fk, stream_name: str) -> dict:
+    """``format("kinesis_py")`` options reaching the fake endpoint."""
+    return {
+        "streamName": stream_name,
+        "endpointUrl": fk.endpoint_url,
+        "accessKeyId": "test",
+        "secretAccessKey": "test",
+    }
+
+
+def _run_available_now(
+    spark: SparkSession,
+    fk,
+    stream_name: str,
+    work: str,
+    initial_position: str = "TRIM_HORIZON",
+) -> None:
+    """One ``trigger(availableNow=True)`` run of the ``kinesis_py``
+    streaming source, to termination, into a parquet sink under
+    ``work`` — every run on the same ``work`` shares one checkpoint, so
+    a later run resumes from the offsets the earlier one committed in
+    Spark's own checkpoint."""
+    import os
+
+    q = (
+        spark.readStream.format("kinesis_py")
+        .options(**_kinesis_py_options(fk, stream_name))
+        .option("initialPosition", initial_position)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", os.path.join(work, "out"))
+        .option("checkpointLocation", os.path.join(work, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300), "kinesis_py query did not terminate"
+
+
+def _parsed_points(raw: DataFrame) -> DataFrame:
+    """Gunzip the landed ``data`` payloads and parse them into points."""
+    from ..streaming.source import decode_payload
+
+    parsed = parse_service_logs(
+        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
+    )
+    return parsed.select(*_POINT_COLS)
+
+
+def _kinesis_py_waves(
+    spark: SparkSession,
+    sf_dir: str,
+    stream_name: str,
+    *,
+    event_cap: int,
+    waves: int,
+    initial_position: str = "TRIM_HORIZON",
+) -> DataFrame:
+    """Shared produce → consume scaffold of the streaming Kinesis
+    queries: split the ``event_id <= event_cap`` events slice into
+    ``waves`` contiguous id ranges; for each, produce it to a 4-shard
+    in-process fake endpoint (real boto3 wire protocol), then run the
+    registered ``kinesis_py`` source with ``availableNow`` to
+    termination on ONE checkpoint. The landed records of every run are
+    parsed back into points. With ``initial_position="LATEST"`` the
+    first run anchors after wave 1 and reads nothing, so the result is
+    every later wave exactly once."""
+    import os
     import shutil
     import tempfile
 
     from ..session import defer_release
-    from ..streaming.kinesis_dev import KinesisMicroBatchPoller
     from ..streaming.kinesis_fake import FakeKinesis
+    from ..streaming.kinesis_pysource import KinesisPythonDataSource
 
-    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") <= event_cap)
-    rendered = e.select(
-        *_render_service_log(
-            [
-                F.lpad(F.col("user_id").cast("string"), 12, "0").alias("pk"),
-                F.pmod(F.col("event_id"), F.lit(n_waves)).alias("wave"),
-            ]
-        )
-    ).collect()
-    waves: dict[int, list] = {w: [] for w in range(n_waves)}
-    for r in rendered:
-        waves[int(r["wave"])].append((r["value"], r["pk"]))
-
-    ckpt = tempfile.mkdtemp(prefix=f"kinesis_{stream_name}_ckpt_")
-    if executor_parallel:
-        defer_release(lambda: shutil.rmtree(ckpt, ignore_errors=True))
-    batch_dfs = []
-    try:
-        with FakeKinesis() as fk:
-            import boto3
-
-            producer = boto3.client(
-                "kinesis",
-                endpoint_url=fk.endpoint_url,
-                region_name="us-east-1",
-                aws_access_key_id="test",
-                aws_secret_access_key="test",
+    spark.dataSource.register(KinesisPythonDataSource)
+    work = tempfile.mkdtemp(prefix=f"kinesis_{stream_name}_")
+    defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
+    with FakeKinesis() as fk:
+        producer = _fake_producer(fk)
+        lo = None
+        for w in range(waves):
+            hi = event_cap * (w + 1) // waves
+            _produce_rendered_events_to_fake(
+                spark,
+                sf_dir,
+                producer,
+                stream_name,
+                event_min=lo,
+                event_cap=hi,
             )
-            producer.create_stream(StreamName=stream_name, ShardCount=4)
-            if executor_parallel:
-                poller = KinesisMicroBatchPoller(
-                    spark,
-                    stream_name,
-                    checkpoint_dir=ckpt,
-                    region="us-east-1",
-                    endpoint_url=fk.endpoint_url,
-                    decode="gzip",
-                    interval_millis=0,
-                    executor_parallel=True,
-                    client_kwargs={
-                        "aws_access_key_id": "test",
-                        "aws_secret_access_key": "test",
-                    },
-                )
-            else:
-                poller = KinesisMicroBatchPoller(
-                    spark,
-                    stream_name,
-                    checkpoint_dir=ckpt,
-                    boto3_client=producer,
-                    decode="gzip",
-                    interval_millis=0,
-                )
-            for w in range(n_waves):
-                recs = [
-                    {"Data": _gzip.compress(v.encode()), "PartitionKey": pk}
-                    for v, pk in waves[w]
-                ]
-                for i in range(0, len(recs), 500):  # PutRecords API cap
-                    producer.put_records(
-                        StreamName=stream_name, Records=recs[i : i + 500]
-                    )
-                bid, df = poller.poll()
-                if executor_parallel:
-                    # honor the poller's consume-before-next-poll
-                    # contract for ANY n_waves: the returned frame READS
-                    # its staging parquet, which poll N+2's _gc_staging
-                    # deletes — pin the rows in executor storage and cut
-                    # the file lineage before polling again (released
-                    # via defer_release like every plan-level pin)
-                    df = df.localCheckpoint(eager=True)
-                    defer_release(df)
-                batch_dfs.append(df)
-                poller.commit(bid)
-    finally:
-        if not executor_parallel:
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-    union = batch_dfs[0]
-    for df in batch_dfs[1:]:
-        union = union.unionAll(df)
-    parsed = parse_service_logs(union)
-    return parsed.select(*_POINT_COLS)
+            _run_available_now(spark, fk, stream_name, work, initial_position)
+            lo = hi
+    return _parsed_points(spark.read.parquet(os.path.join(work, "out")))
 
 
 @query(
@@ -290,34 +315,31 @@ def _kinesis_produce_consume_roundtrip(
     FROM events
     WHERE event_id <= 1500
     """,
-    tags=("kinesis", "streaming", "incremental", "reference-parity"),
+    tags=(
+        "kinesis",
+        "streaming",
+        "incremental",
+        "reference-parity",
+        "harness-roundtrip",
+    ),
 )
 def kinesis_incremental_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END incremental Kinesis consumption (the last
     reference-parity surface, VERDICT r4 #1): events rows are rendered
-    into the generator's exact gzip'd service-log wire format
-    (timestream_kinesis_data_gen.py:24-36, 75-78; partition key =
-    account id) and produced in THREE waves to an in-process fake
-    Kinesis endpoint (real boto3 wire protocol, 4 shards); the
-    jar-free ``KinesisMicroBatchPoller`` consumes them in three
-    incremental polls — persisted shard positions, commit-per-batch,
-    exactly-once boundaries — and the union of the three batches is
-    gunzipped and parsed back into points. The oracle is the identity
-    over the same events slice, so a record lost, duplicated, or
-    corrupted across ANY batch boundary hash-mismatches.
+    into the generator's exact gzip'd service-log wire format and
+    produced in THREE waves to an in-process fake Kinesis endpoint
+    (real boto3 wire protocol, 4 shards); after each wave an
+    availableNow run of ``format("kinesis_py")`` consumes it from the
+    offsets the previous run committed to the shared checkpoint, and
+    the union of the three runs is gunzipped and parsed back into
+    points. The oracle is the identity over the same events slice, so a
+    record lost, duplicated, or corrupted across ANY run boundary
+    hash-mismatches.
 
-    Driver-side produce/poll is the point here (this is the dev/proof
-    surface; production uses the connector where executors own shards
-    — streaming/source.py); decode + parse run as Spark plans.
-    """
-    return _kinesis_produce_consume_roundtrip(
-        spark,
-        sf_dir,
-        event_cap=1500,
-        n_waves=3,
-        stream_name="events-log",
-        executor_parallel=False,
-    )
+    Tagged ``harness-roundtrip``: three checkpointed runs, each with a
+    bounded <=1 s boundary wait, are constant-cost machinery, not a
+    distributed plan."""
+    return _kinesis_py_waves(spark, sf_dir, "events-log", event_cap=1500, waves=3)
 
 
 @query(
@@ -522,76 +544,30 @@ def asof_join_forward_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_id <= 1200
     """,
-    tags=("kinesis", "streaming", "parallel", "reference-parity"),
+    tags=(
+        "kinesis",
+        "streaming",
+        "parallel",
+        "reference-parity",
+        "harness-roundtrip",
+    ),
 )
 def kinesis_parallel_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTOR-PARALLEL incremental Kinesis consumption (VERDICT r5
     #2 — the scale shape of the reference's parallel subtask
     consumption, StreamingJob.java:98-106): the same gzip'd
     service-log wire format as ``kinesis_incremental_consume``,
-    produced in TWO waves to a 4-shard in-process fake endpoint, but
-    consumed with ``executor_parallel=True`` — each shard is drained
-    by its own mapInPandas task holding its own boto3 client, batches
-    stage to parquet under the checkpoint, and the driver only ever
-    collects the #shards-sized ledger rows. The oracle is the identity
-    over the same events slice, so any record lost, duplicated, or
-    corrupted across the task fan-out or a batch boundary
-    hash-mismatches.
+    produced in TWO waves to a 4-shard in-process fake endpoint and
+    consumed by two checkpointed availableNow runs of
+    ``format("kinesis_py")`` — per micro-batch, each shard is drained
+    by its own executor task holding its own boto3 client, and the
+    driver only lists shards. The oracle is the identity over the same
+    events slice, so any record lost, duplicated, or corrupted across
+    the task fan-out or a run boundary hash-mismatches.
 
-    The returned frame READS the staged parquet (data rows never pass
-    through the driver); the checkpoint dir is handed to
-    ``defer_release`` for removal once the consumer has collected —
-    the same deferred-consumption contract plan-level caches follow.
-    """
-    return _kinesis_produce_consume_roundtrip(
-        spark,
-        sf_dir,
-        event_cap=1200,
-        n_waves=2,
-        stream_name="events-par",
-        executor_parallel=True,
-    )
-
-
-
-
-def _produce_rendered_events_to_fake(
-    spark: SparkSession,
-    sf_dir: str,
-    producer,
-    stream_name: str,
-    *,
-    event_cap: int,
-    event_min: int | None = None,
-    shard_count: int = 4,
-    create_stream: bool = True,
-) -> None:
-    """Shared produce side of the registered-format Kinesis queries
-    (review finding: the render+create_stream+gzip+chunked-PutRecords
-    block was copy-pasted): render the ``event_min < event_id <=
-    event_cap`` events slice into the generator's gzip'd wire format
-    and put it to the fake stream in 500-record chunks (the PutRecords
-    API cap). ``event_min``/``create_stream=False`` let a caller
-    produce a SECOND wave to an existing stream — the mid-stream start
-    shape the LATEST initial-position query needs."""
-    import gzip as _gzip
-
-    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") <= event_cap)
-    if event_min is not None:
-        e = e.filter(F.col("event_id") > event_min)
-    rendered = e.select(
-        *_render_service_log(
-            [F.lpad(F.col("user_id").cast("string"), 12, "0").alias("pk")]
-        )
-    ).collect()
-    if create_stream:
-        producer.create_stream(StreamName=stream_name, ShardCount=shard_count)
-    recs = [
-        {"Data": _gzip.compress(r["value"].encode()), "PartitionKey": r["pk"]}
-        for r in rendered
-    ]
-    for i in range(0, len(recs), 500):
-        producer.put_records(StreamName=stream_name, Records=recs[i : i + 500])
+    Tagged ``harness-roundtrip``: two checkpointed runs are
+    constant-cost machinery, not a distributed plan."""
+    return _kinesis_py_waves(spark, sf_dir, "events-par", event_cap=1200, waves=2)
 
 
 @query(
@@ -608,7 +584,13 @@ def _produce_rendered_events_to_fake(
     FROM events
     WHERE event_id <= 1000
     """,
-    tags=("kinesis", "streaming", "datasource-api", "reference-parity"),
+    tags=(
+        "kinesis",
+        "streaming",
+        "datasource-api",
+        "reference-parity",
+        "harness-roundtrip",
+    ),
 )
 def kinesis_pysource_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kinesis consumption through a REAL registered Spark source — the
@@ -619,56 +601,16 @@ def kinesis_pysource_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     produced to the in-process fake Kinesis endpoint (real boto3 wire
     protocol, 4 shards, partition key = account id), consumed by
     ``spark.readStream`` with ENGINE-managed offsets (Spark's own
-    checkpoint, not a hand-rolled ledger), landed in a memory sink,
+    checkpoint, not a hand-rolled ledger), landed in a file sink,
     gunzipped, and parsed back into points. The oracle is the identity
     over the same events slice, so any record lost, duplicated, or
     corrupted through the source → micro-batch → sink path
-    hash-mismatches. Offset resume and failure replay
-    (``readBetweenOffsets``) are pinned by tests/test_kinesis_source.py.
-    """
-    import os
+    hash-mismatches. Offset resume and failure replay are pinned by
+    tests/test_kinesis_source.py.
 
-    from ..session import defer_release
-    from ..streaming.kinesis_fake import FakeKinesis
-    from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
-
-    spark.dataSource.register(KinesisPythonDataSource)
-    sink = f"kinesis_pysource_sink_{os.getpid()}"
-    with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
-        _produce_rendered_events_to_fake(
-            spark, sf_dir, producer, "pysource-log", event_cap=1000
-        )
-        stream_df = (
-            spark.readStream.format("kinesis_py")
-            .option("streamName", "pysource-log")
-            .option("endpointUrl", fk.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
-            .load()
-        )
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    defer_release(lambda: spark.catalog.dropTempView(sink))
-    raw = spark.table(sink)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    Tagged ``harness-roundtrip``: one checkpointed run with a bounded
+    <=1 s boundary wait is constant-cost machinery."""
+    return _kinesis_py_waves(spark, sf_dir, "pysource-log", event_cap=1000, waves=1)
 
 
 @query(
@@ -813,36 +755,22 @@ def kinesis_pysource_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
     shard (streaming/kinesis_pysource.py:KinesisBatchReader), so each
     of the 4 shards is drained by its own executor task with its own
     boto3 client — the production fan-out shape (1000 shards = 1000
-    parallel tasks, driver does metadata only), now through Spark's
-    public DataSource partition planning rather than the hand-rolled
-    mapInPandas poller. Records gunzip + parse back into points;
+    parallel tasks, driver does metadata only), through Spark's public
+    DataSource partition planning. Records gunzip + parse back into points;
     identity oracle. One-task-per-shard planning is pinned by
     tests/test_kinesis_source.py."""
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
         _produce_rendered_events_to_fake(
-            spark, sf_dir, producer, "pysnap-log", event_cap=1000
+            spark, sf_dir, _fake_producer(fk), "pysnap-log", event_cap=1000
         )
         raw = (
             spark.read.format("kinesis_py")
-            .option("streamName", "pysnap-log")
-            .option("endpointUrl", fk.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
+            .options(**_kinesis_py_options(fk, "pysnap-log"))
             .load()
         )
         # the fake endpoint dies with the context manager, so the
@@ -853,10 +781,7 @@ def kinesis_pysource_batch_snapshot(spark: SparkSession, sf_dir: str) -> DataFra
         # checkpoint pins executor storage for the session's lifetime)
         raw = raw.localCheckpoint(eager=True)
         defer_release(raw)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    return _parsed_points(raw)
 
 
 @query(
@@ -889,8 +814,9 @@ def kinesis_pysource_latest_resume(spark: SparkSession, sf_dir: str) -> DataFram
     produced FIRST, then a query starts with
     ``initialPosition=LATEST`` — anchoring every shard at
     AT_TIMESTAMP(query start), the only tip anchor the public API can
-    replay (streaming/kinesis_pysource.py:initialOffset) — and runs to
-    termination, committing the anchor into Spark's checkpoint. Wave 2
+    replay (streaming/kinesis_pysource.py) — and runs to termination,
+    committing the anchor into Spark's checkpoint (its boundary wait
+    lets the anchor second elapse before the run ends). Wave 2
     (500 < event_id <= 1000) is produced after, and a SECOND run from
     the SAME checkpoint picks up exactly wave 2: the oracle is the
     identity over the wave-2 slice alone, so a leaked wave-1 record, a
@@ -905,76 +831,14 @@ def kinesis_pysource_latest_resume(spark: SparkSession, sf_dir: str) -> DataFram
     anchor-granularity boundary wait (ADVICE r9) — not by any
     distributed plan, so bench.py reports it in the harness tier and
     keeps it out of the plan-cost headline."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..session import defer_release
-    from ..streaming.kinesis_fake import FakeKinesis
-    from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
-
-    spark.dataSource.register(KinesisPythonDataSource)
-    work = tempfile.mkdtemp(prefix="kinesis_pysource_latest_")
-    defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
-    with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
-
-        def run_to_termination() -> None:
-            q = (
-                spark.readStream.format("kinesis_py")
-                .option("streamName", "pysource-latest")
-                .option("endpointUrl", fk.endpoint_url)
-                .option("accessKeyId", "test")
-                .option("secretAccessKey", "test")
-                .option("initialPosition", "LATEST")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            assert q.awaitTermination(300), "kinesis_py query did not terminate"
-
-        _produce_rendered_events_to_fake(
-            spark, sf_dir, producer, "pysource-latest", event_cap=500
-        )
-        run_to_termination()  # anchors LATEST after wave 1, commits it
-        # the anchor is ceiled to a whole second (the Timestamp wire
-        # param carries integer seconds) and was taken DURING the run
-        # just awaited — wave 2 must arrive strictly after that second
-        # or its same-second records would sit before the anchor
-        import math as _math
-        import time as _time
-
-        boundary = _math.ceil(_time.time())
-        while _time.time() <= boundary:
-            _time.sleep(0.05)
-        _produce_rendered_events_to_fake(
-            spark,
-            sf_dir,
-            producer,
-            "pysource-latest",
-            event_min=500,
-            event_cap=1000,
-            create_stream=False,
-        )
-        run_to_termination()  # resumes from the checkpointed anchors
-    raw = spark.read.parquet(out)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
+    return _kinesis_py_waves(
+        spark,
+        sf_dir,
+        "pysource-latest",
+        event_cap=1000,
+        waves=2,
+        initial_position="LATEST",
     )
-    return parsed.select(*_POINT_COLS)
 
 
 @query(
@@ -1029,79 +893,43 @@ def kinesis_pysource_reshard_resume(spark: SparkSession, sf_dir: str) -> DataFra
     from ..session import defer_release
     from ..streaming.kinesis_fake import FakeKinesis
     from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
 
     spark.dataSource.register(KinesisPythonDataSource)
     work = tempfile.mkdtemp(prefix="kinesis_pysource_reshard_")
     defer_release(lambda: shutil.rmtree(work, ignore_errors=True))
-    out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
+    stream = "pysource-reshard"
     with FakeKinesis() as fk:
-        import boto3
+        producer = _fake_producer(fk)
 
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
-
-        def run_to_termination() -> None:
-            q = (
-                spark.readStream.format("kinesis_py")
-                .option("streamName", "pysource-reshard")
-                .option("endpointUrl", fk.endpoint_url)
-                .option("accessKeyId", "test")
-                .option("secretAccessKey", "test")
-                .option("reader", "partitioned")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        def produce(*, event_cap: int, event_min: int | None = None) -> None:
+            _produce_rendered_events_to_fake(
+                spark,
+                sf_dir,
+                producer,
+                stream,
+                event_min=event_min,
+                event_cap=event_cap,
             )
-            assert q.awaitTermination(300), "kinesis_py query did not terminate"
 
-        _produce_rendered_events_to_fake(
-            spark, sf_dir, producer, "pysource-reshard", event_cap=400
-        )
-        run_to_termination()  # commits arrival-time boundaries per shard
+        produce(event_cap=400)
+        # commits arrival-time boundaries per shard
+        _run_available_now(spark, fk, stream, work)
         # downtime: wave 2a lands in the ORIGINAL shards, then shard 0
         # closes with those records still undrained
-        _produce_rendered_events_to_fake(
-            spark,
-            sf_dir,
-            producer,
-            "pysource-reshard",
-            event_min=400,
-            event_cap=600,
-            create_stream=False,
-        )
-        shard0 = producer.list_shards(StreamName="pysource-reshard")["Shards"][0]
+        produce(event_min=400, event_cap=600)
+        shard0 = producer.list_shards(StreamName=stream)["Shards"][0]
         hr = shard0["HashKeyRange"]
         producer.split_shard(
-            StreamName="pysource-reshard",
+            StreamName=stream,
             ShardToSplit=shard0["ShardId"],
             NewStartingHashKey=str(
                 (int(hr["StartingHashKey"]) + int(hr["EndingHashKey"])) // 2 + 1
             ),
         )
-        _produce_rendered_events_to_fake(
-            spark,
-            sf_dir,
-            producer,
-            "pysource-reshard",
-            event_min=600,
-            event_cap=800,
-            create_stream=False,
-        )
-        run_to_termination()  # tombstone-drains the parent, admits children
-    raw = spark.read.parquet(out)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+        produce(event_min=600, event_cap=800)
+        # tombstone-drains the parent, admits the children
+        _run_available_now(spark, fk, stream, work)
+    return _parsed_points(spark.read.parquet(os.path.join(work, "out")))
 
 
 @query(
@@ -1133,60 +961,17 @@ def kinesis_pysource_reshard_resume(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def kinesis_pysource_partitioned_consume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXECUTOR-PARALLEL STREAMING consumption through the registered
-    source (VERDICT r8 #3 — the full ``DataSourceStreamReader``,
-    ``option("reader", "partitioned")``): per trigger the driver does
-    METADATA-ONLY work — one ListShards call plus a whole-second
-    arrival-time boundary, never a GetRecords (VERDICT r9 #2: driver
-    transfer is O(shards), not O(records))
+    source (VERDICT r8 #3 — the full ``DataSourceStreamReader``): per
+    trigger the driver does METADATA-ONLY work — one ListShards call
+    plus a whole-second arrival-time boundary, never a GetRecords
+    (VERDICT r9 #2: driver transfer is O(shards), not O(records))
     (streaming/kinesis_pysource.py:KinesisPartitionedStreamReader), and
     ONE Spark input partition per shard drains its exact arrival-time
     interval ``[position(T_prev), position(T_cur))`` on an executor
-    with its own boto3 client — the shards-fan-out scale shape of
-    ``kinesis_dev.py``'s parallel poller, now with engine-managed
-    offsets and engine failure replay. Identity oracle over the
-    produced slice: a record lost, duplicated, or reordered across the
-    boundary planning → executor drain path hash-mismatches.
-    One-task-per-shard planning, metadata-only latestOffset, and
-    checkpoint resume are pinned by tests/test_kinesis_source.py."""
-    import os
-
-    from ..session import defer_release
-    from ..streaming.kinesis_fake import FakeKinesis
-    from ..streaming.kinesis_pysource import KinesisPythonDataSource
-    from ..streaming.source import decode_payload
-
-    spark.dataSource.register(KinesisPythonDataSource)
-    sink = f"kinesis_pysource_part_sink_{os.getpid()}"
-    with FakeKinesis() as fk:
-        import boto3
-
-        producer = boto3.client(
-            "kinesis",
-            endpoint_url=fk.endpoint_url,
-            region_name="us-east-1",
-            aws_access_key_id="test",
-            aws_secret_access_key="test",
-        )
-        _produce_rendered_events_to_fake(
-            spark, sf_dir, producer, "pysource-part", event_cap=1000
-        )
-        q = (
-            spark.readStream.format("kinesis_py")
-            .option("streamName", "pysource-part")
-            .option("endpointUrl", fk.endpoint_url)
-            .option("accessKeyId", "test")
-            .option("secretAccessKey", "test")
-            .option("reader", "partitioned")
-            .load()
-            .writeStream.format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "kinesis_py query did not terminate"
-    defer_release(lambda: spark.catalog.dropTempView(sink))
-    raw = spark.table(sink)
-    parsed = parse_service_logs(
-        raw.select(decode_payload(F.col("data"), codec="gzip").alias("value"))
-    )
-    return parsed.select(*_POINT_COLS)
+    with its own boto3 client, with engine-managed offsets and engine
+    failure replay. Identity oracle over the produced slice: a record
+    lost, duplicated, or reordered across the boundary planning →
+    executor drain path hash-mismatches. One-task-per-shard planning,
+    metadata-only latestOffset, and checkpoint resume are pinned by
+    tests/test_kinesis_source.py."""
+    return _kinesis_py_waves(spark, sf_dir, "pysource-part", event_cap=1000, waves=1)

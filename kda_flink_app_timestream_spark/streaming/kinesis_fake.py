@@ -3,9 +3,10 @@
 Implements just enough of the public wire protocol
 (application/x-amz-json-1.1, ``X-Amz-Target: Kinesis_20131202.<Op>``)
 for boto3 to create streams, put records, drain shards, and RESHARD —
-so the engine's consumer paths (one-shot snapshot and the incremental
-micro-batch poller, ``kinesis_dev.py``) run REAL produce→consume
-round-trips in any sandbox, including shard split/merge lifecycles
+so the engine's jar-free consumer (``format("kinesis_py")``,
+``kinesis_pysource.py``: streaming micro-batches and batch snapshots)
+runs REAL produce→consume round-trips in any sandbox, including shard
+split/merge lifecycles
 (the scaling events the reference's live stream would undergo;
 StreamingJob.java:74-110 consumes through the Flink connector, which
 handles the same lifecycle via the same public API).
@@ -18,7 +19,9 @@ closes the parent (its ``SequenceNumberRange`` gains an
 creates one child carrying ``ParentShardId``/``AdjacentParentShardId``.
 A closed, fully-drained shard returns ``NextShardIterator: null`` from
 ``GetRecords`` — the signal consumers use to retire it and start its
-children.
+children. Arrival stamps carry millisecond precision, as the real
+service reports them, so the AT_TIMESTAMP position rule here and a
+consumer's stop rule on the wire-decoded stamp compare the same value.
 
 Pure stdlib; no auth (signatures are accepted unverified, like
 kinesalite). Lives in the package because the jar-free consumer is a
@@ -30,6 +33,7 @@ from __future__ import annotations
 import base64
 import hashlib
 import json
+import math
 import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -94,7 +98,14 @@ class _Stream:
         shard["records"].append(
             {
                 "SequenceNumber": seq,
-                "ApproximateArrivalTimestamp": time.time(),
+                # millisecond precision, as the real service stamps:
+                # botocore decodes the wire value to a microsecond
+                # datetime, so a full-precision float such as
+                # 1700000001.9999998 would reach the consumer as
+                # ...002.0 while the AT_TIMESTAMP rule below saw it
+                # below ...002 — a record on the boundary lost between
+                # two batches
+                "ApproximateArrivalTimestamp": math.floor(time.time() * 1000) / 1000,
                 "Data": data_b64,
                 "PartitionKey": partition_key,
             }
@@ -155,9 +166,9 @@ class FakeKinesis:
     def __init__(self):
         self.streams: dict[str, _Stream] = {}
         # (shard_id, Limit) per GetRecords request, in arrival order —
-        # lets tests observe the Limit each consumer actually sent,
-        # including from executor tasks whose clients the test can't
-        # wrap (the adaptive-reads carry is asserted server-side)
+        # lets tests observe which calls a consumer made, including from
+        # executor tasks whose clients the test can't wrap (the
+        # metadata-only latestOffset is asserted server-side)
         self.get_records_log: list[tuple[str, int]] = []
         self._lock = threading.Lock()
         outer = self

@@ -5,78 +5,71 @@ spark-sql-kinesis connector JAR, which does not exist in this
 environment — the one §2.1 #1 surface that had never executed (VERDICT
 r7 "What's missing" #1). Spark 4's public Python DataSource API
 (``pyspark.sql.datasource``) closes that gap without any jar: this
-module registers ``format("kinesis_py")``, a first-class
-``spark.readStream`` source whose offsets live in Spark's OWN
-checkpoint (initialOffset / read / readBetweenOffsets contract), wired
-to the public Kinesis HTTP API through boto3 — the same wire protocol
-the reference's consumer speaks (StreamingJob.java:74-110), exercised
-in tests against the in-process fake endpoint.
+module registers ``format("kinesis_py")``, the repo's ONE jar-free
+Kinesis consumer — a first-class ``spark.readStream`` source whose
+offsets live in Spark's OWN checkpoint, wired to the public Kinesis
+HTTP API through boto3 (the same wire protocol the reference's
+consumer speaks, StreamingJob.java:74-110), and a
+``spark.read`` batch snapshot of the same stream.
 
-Two streaming execution modes (``reader`` option):
-
-- default (``SimpleDataSourceStreamReader``): polls on the DRIVER and
-  lets Spark distribute the batch — the reference's single-consumer
-  shape (its Flink source also polls each shard from one subtask,
-  StreamingJob.java:98-106).
-- ``reader=partitioned`` (full ``DataSourceStreamReader``, VERDICT r8
-  #3): the driver never touches record payloads at all. ``latestOffset``
-  is METADATA-ONLY — one ListShards call plus a wall-clock arrival-time
-  boundary (a whole epoch second; the GetShardIterator ``Timestamp``
-  wire parameter carries integer seconds, verified against botocore's
-  serializer) — so per-trigger driver transfer is O(shards), not
-  O(records) (VERDICT r9 #2: the previous design paged full payloads
-  through a driver-side bounds probe and discarded them).
-  ``partitions()`` plans ONE Spark input partition per open shard with
-  deterministic ``[position(T_prev), position(T_cur))`` arrival-time
-  bounds, and each EXECUTOR task drains its own shard range with its
-  own boto3 client — the shards-fan-out shape of ``kinesis_dev.py``'s
-  parallel poller, with engine-managed offsets. Replay determinism:
-  ``position(T)`` = the first record whose server-side
-  ApproximateArrivalTimestamp is >= T, in sequence order — exactly what
-  an AT_TIMESTAMP shard iterator resolves. Records are immutable and a
-  record ingested after wall-clock T carries an arrival stamp >= T, so
-  once T is in the past the interval's content is frozen;
-  ``latestOffset`` therefore waits (<1 s) until its chosen boundary
-  second has fully elapsed before returning. position(T) is monotone in
-  T even if arrival stamps are locally non-monotonic (first-index-with-
-  arrival>=T can only move forward), so consecutive batches are disjoint
-  and exhaustive. Clock-skew caveat: the boundary is the driver's
-  clock, arrival stamps are the service's. A service clock AHEAD of
-  the driver only defers records to a later trigger; a service clock
-  BEHIND the driver by d seconds can LOSE a record — one ingested
-  right after a batch's drain but stamped before that batch's
-  boundary sits positionally before where the next batch's
-  AT_TIMESTAMP iterator starts. ``boundaryLagSeconds`` (default 0)
-  closes this: the boundary is held that many seconds behind the
-  driver clock and ``latestOffset`` returns only once the boundary is
-  lag-deep in the past, so any record stamped before it by a service
-  clock up to ``lag`` behind is already ingested and drained. Set it
-  to the deployment's clock-error bound (a few seconds) in
-  production; the in-process test fake shares one clock, so 0 is
-  exact there. Boundaries are also clamped monotonic per reader, so a
-  backwards driver-clock step (NTP), or an explicit AT_TIMESTAMP
-  anchor ahead of the current clock, HOLDS the last boundary — cheap
-  empty batches until the clock re-passes it. NO boundary within one
-  second of the clock is ever returned before it has elapsed, held or
-  not: the engine commits whatever latestOffset returns, and a query
-  that terminates inside an unelapsed committed second strands every
-  record arriving in the second's remainder behind the resume
-  position (the r10 LATEST-restart flake — see latestOffset). Only a
-  FAR-future held floor returns unelapsed, where exclusion is the
-  anchor's own semantics. A regression the in-process clamp cannot see fails
-  partition planning loudly rather than committing a duplicate or
-  empty batch — this includes the operational caveat that RAISING
-  ``boundaryLagSeconds`` on an existing checkpoint can push the first
-  post-restart boundary behind the committed position: change the lag
-  only with a fresh checkpoint (or accept cleaning the wedged pending
-  batch from the offset log).
-  Closed shards (reshard parents) are detected from ListShards metadata
-  (``EndingSequenceNumber``) and tombstoned with a final
-  sequence-bounded batch that drains the whole remainder, so a shard
-  closing during query downtime is never dropped. ``maxPagesPerBatch``
-  does not apply to this reader (there is no driver probe to cap);
-  ``maxBatchTimeRangeSeconds`` instead bounds each trigger's
-  arrival-time span during catch-up.
+One streaming mode, ``KinesisPartitionedStreamReader`` (the full
+``DataSourceStreamReader``): the driver never touches record payloads.
+``latestOffset`` is METADATA-ONLY — one ListShards call plus a
+wall-clock arrival-time boundary (a whole epoch second; the
+GetShardIterator ``Timestamp`` wire parameter carries integer seconds,
+verified against botocore's serializer) — so per-trigger driver
+transfer is O(shards), not O(records). ``partitions()`` plans ONE
+Spark input partition per open shard with deterministic
+``[position(T_prev), position(T_cur))`` arrival-time bounds, and each
+EXECUTOR task drains its own shard range with its own boto3 client (the
+reference's parallel-subtask shape, StreamingJob.java:98-106). Replay
+determinism: ``position(T)`` = the first record whose server-side
+ApproximateArrivalTimestamp is >= T, in sequence order — exactly what
+an AT_TIMESTAMP shard iterator resolves. Records are immutable and a
+record ingested after wall-clock T carries an arrival stamp >= T, so
+once T is in the past the interval's content is frozen;
+``latestOffset`` therefore waits (<1 s) until its chosen boundary
+second has fully elapsed before returning. position(T) is monotone in
+T even if arrival stamps are locally non-monotonic (first-index-with-
+arrival>=T can only move forward), so consecutive batches are disjoint
+and exhaustive. Clock-skew caveat: the boundary is the driver's clock,
+arrival stamps are the service's. A service clock AHEAD of the driver
+only defers records to a later trigger; a service clock BEHIND the
+driver by d seconds can LOSE a record — one ingested right after a
+batch's drain but stamped before that batch's boundary sits
+positionally before where the next batch's AT_TIMESTAMP iterator
+starts. ``boundaryLagSeconds`` (default 0) closes this: the boundary is
+held that many seconds behind the driver clock and ``latestOffset``
+returns only once the boundary is lag-deep in the past, so any record
+stamped before it by a service clock up to ``lag`` behind is already
+ingested and drained. Set it to the deployment's clock-error bound (a
+few seconds) in production; the in-process test fake shares one clock,
+so 0 is exact there. Boundaries are also clamped monotonic per reader,
+so a backwards driver-clock step (NTP), or an explicit AT_TIMESTAMP
+anchor ahead of the current clock, HOLDS the last boundary — cheap
+empty batches until the clock re-passes it. NO boundary within one
+second of the clock is ever returned before it has elapsed, held or
+not: the engine commits whatever latestOffset returns, and a query
+that terminates inside an unelapsed committed second strands every
+record arriving in the second's remainder behind the resume position
+(see latestOffset). Only a FAR-future held floor returns unelapsed,
+where exclusion is the anchor's own semantics. A regression the
+in-process clamp cannot see fails partition planning loudly rather
+than committing a duplicate or empty batch — this includes the
+operational caveat that RAISING ``boundaryLagSeconds`` on an existing
+checkpoint can push the first post-restart boundary behind the
+committed position: change the lag only with a fresh checkpoint (or
+accept cleaning the wedged pending batch from the offset log). Closed
+shards (reshard parents) are detected from ListShards metadata
+(``EndingSequenceNumber``) and tombstoned with a final
+sequence-bounded batch that drains the whole remainder, so a shard
+closing during query downtime is never dropped.
+``maxBatchTimeRangeSeconds`` bounds each trigger's arrival-time span
+during catch-up. The reference's adaptive-reads mode
+(SHARD_USE_ADAPTIVE_READS) has no counterpart: there is no poll
+interval to size a GetRecords Limit against —
+``maxFetchRecordsPerShard`` (default 10000, SHARD_GETRECORDS_MAX) is
+the page size.
 
 Initial positions (``initialPosition`` option) mirror the connector's:
 
@@ -102,31 +95,25 @@ Initial positions (``initialPosition`` option) mirror the connector's:
 
 Trigger note: Spark's PythonMicroBatchStream wrapper does not implement
 SupportsTriggerAvailableNow, so ``trigger(availableNow=True)`` degrades
-(with an engine warning) to single-batch execution for BOTH reader
-modes. With the default unbounded drain that single batch is still a
-complete snapshot; combining availableNow with ``maxPagesPerBatch``
-(simple reader) or ``maxBatchTimeRangeSeconds`` (partitioned reader) is
-the one lossy combination (the cap truncates the only batch) — batch
-caps belong to continuous triggers, where the next trigger continues
-from the committed offsets.
+(with an engine warning) to single-batch execution. With the default
+uncapped span that single batch is still a complete snapshot;
+combining availableNow with ``maxBatchTimeRangeSeconds`` is the one
+lossy combination (the cap truncates the only batch) — batch caps
+belong to continuous triggers, where the next trigger continues from
+the committed offsets.
 
-Offset format: ``{shard_id: position}``. Both readers share
-``"<TRIM_HORIZON>"`` (not yet read, from the oldest record),
-``"<AT_TS>:<epoch>"`` anchors, and ``"<CLOSED>:"``-prefixed tombstones
-(retired reshard parents). The simple reader's live positions are
-concrete last-read sequence numbers (numeric strings, strictly
-increasing per shard, so AFTER_SEQUENCE_NUMBER iterators + integer
-comparison give exact replay bounds); the partitioned reader's live
-positions are whole-second ``<AT_TS>`` arrival-time boundaries, and its
-tombstones carry the shard's metadata EndingSequenceNumber so the
-closing batch has an exact sequence bound. The two formats are
-self-consistent per checkpoint; switching reader modes requires a fresh
-checkpoint.
+Offset format: ``{shard_id: position}`` where a position is
+``"<TRIM_HORIZON>"`` (not yet read, from the oldest record), an
+``"<AT_TS>:<epoch>"`` arrival-time anchor or boundary, or a
+``"<CLOSED>:<EndingSequenceNumber>"`` tombstone (a retired reshard
+parent; the metadata end bound gives its closing batch an exact
+sequence bound). Any other position — such as a concrete sequence
+number from a checkpoint written by an older reader — is refused with
+a request for a fresh checkpoint.
 """
 
 from __future__ import annotations
 
-import logging
 import math
 import time
 from dataclasses import dataclass
@@ -137,27 +124,36 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
-
-logger = logging.getLogger(__name__)
 
 TRIM = "<TRIM_HORIZON>"
 # position anchored at a server-side arrival timestamp (epoch seconds):
-# how LATEST / AT_TIMESTAMP initial positions stay replayable — an
-# AT_TIMESTAMP shard iterator can be re-created deterministically on
-# every failure replay, which a transient LATEST iterator token cannot
+# how LATEST / AT_TIMESTAMP initial positions and every live boundary
+# stay replayable — an AT_TIMESTAMP shard iterator can be re-created
+# deterministically on every failure replay, which a transient LATEST
+# iterator token cannot
 AT_TS = "<AT_TS>:"
-# a shard that was fully drained AND closed (reshard parent): the prefix
-# keeps the final sequence number so the CLOSING batch can still be
-# replayed exactly, while later batches skip the shard entirely — once a
-# real endpoint ages the sequence past retention, a naive
-# AFTER_SEQUENCE_NUMBER iterator request would throw on every trigger
-# and wedge the query (review finding)
+# a CLOSED shard (reshard parent): the prefix keeps the shard's
+# metadata end sequence so the CLOSING batch can still be replayed
+# exactly, while later batches skip the shard entirely
 CLOSED = "<CLOSED>:"
-# one GetRecords page per shard per poll in the reference's fixed mode
+# one GetRecords page per shard per call in the reference's fixed mode
 # (SHARD_GETRECORDS_MAX, StreamingJob.java:93-94)
 DEFAULT_MAX_RECORDS = 10_000
+# consecutive empty, non-progressing GetRecords pages before a shard
+# drain gives up (see _records)
+_MAX_STALLED_PAGES = 100
+
+
+def _parse_options(options: dict) -> dict:
+    opts = {k.lower(): v for k, v in dict(options).items()}
+    if not opts.get("streamname"):
+        raise ValueError("kinesis_py requires the streamName option")
+    return opts
+
+
+def _max_records(options: dict) -> int:
+    return int(options.get("maxfetchrecordspershard", DEFAULT_MAX_RECORDS))
 
 
 def _client(options: dict):
@@ -174,58 +170,55 @@ def _client(options: dict):
     )
 
 
-def _is_anchor(pos: str) -> bool:
-    """True for not-yet-read positions (TRIM / AT_TS anchors) — anything
-    that is not a concrete last-read sequence number."""
-    return pos == TRIM or pos.startswith(AT_TS)
+def _list_shards(client, stream: str) -> list[dict]:
+    """Every shard of ``stream`` (full ListShards dicts, open and
+    closed). ListShards, not DescribeStream: the real API caps
+    DescribeStream at 10 TPS account-wide while ListShards (the
+    purpose-built call) allows 100 TPS — one listing per micro-batch
+    across a few queries would throttle on the control-plane call
+    otherwise."""
+    shards: list[dict] = []
+    token = None
+    while True:
+        kwargs = {"NextToken": token} if token else {"StreamName": stream}
+        page = client.list_shards(**kwargs)
+        shards.extend(page.get("Shards", []))
+        token = page.get("NextToken")
+        if not token:
+            return shards
+
+
+def _check_start(shard_id: str, pos: str) -> None:
+    """Refuse a start position no shard iterator can resolve: checked
+    when a batch is planned on the driver, and again by every
+    executor-side iterator request."""
+    if not (pos == TRIM or pos.startswith(AT_TS)):
+        raise ValueError(
+            f"kinesis_py: unrecognized start position {pos!r} for {shard_id} "
+            "(sequence-number checkpoint from an older reader?) — start from "
+            "a fresh checkpoint"
+        )
 
 
 def _get_iterator(client, stream: str, shard_id: str, pos: str) -> str:
-    """Shard iterator for a stored position. A concrete sequence that
-    the service no longer accepts (aged past stream retention during
-    query downtime) falls back to TRIM_HORIZON with a logged data-loss
-    window instead of wedging the query on every trigger (real-connector
-    behavior; ADVICE r8): the expired records are gone either way — the
-    choice is between resuming at the oldest retained record and
-    failing forever."""
+    """Shard iterator for a stored start position: TRIM_HORIZON or an
+    AT_TIMESTAMP anchor. Nothing else is a valid start — a concrete
+    sequence number can only come from a checkpoint written by an older
+    reader, and guessing where to resume from it would risk silent loss
+    or duplication."""
     if pos == TRIM:
         return client.get_shard_iterator(
             StreamName=stream,
             ShardId=shard_id,
             ShardIteratorType="TRIM_HORIZON",
         )["ShardIterator"]
-    if pos.startswith(AT_TS):
-        return client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="AT_TIMESTAMP",
-            Timestamp=float(pos[len(AT_TS):]),
-        )["ShardIterator"]
-    try:
-        return client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="AFTER_SEQUENCE_NUMBER",
-            StartingSequenceNumber=pos,
-        )["ShardIterator"]
-    except Exception as ex:
-        code = getattr(ex, "response", {}).get("Error", {}).get("Code", "")
-        if code != "InvalidArgumentException":
-            raise
-        logger.warning(
-            "kinesis_py: committed sequence %s on %s/%s no longer valid "
-            "(aged past stream retention?) — falling back to TRIM_HORIZON; "
-            "records between the expired offset and the oldest retained "
-            "record are lost",
-            pos,
-            stream,
-            shard_id,
-        )
-        return client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=shard_id,
-            ShardIteratorType="TRIM_HORIZON",
-        )["ShardIterator"]
+    _check_start(shard_id, pos)
+    return client.get_shard_iterator(
+        StreamName=stream,
+        ShardId=shard_id,
+        ShardIteratorType="AT_TIMESTAMP",
+        Timestamp=float(pos[len(AT_TS):]),
+    )["ShardIterator"]
 
 
 def _record_row(stream: str, shard_id: str, rec: dict) -> tuple:
@@ -242,6 +235,43 @@ def _record_row(stream: str, shard_id: str, rec: dict) -> tuple:
     )
 
 
+def _records(
+    client, stream: str, shard_id: str, begin: str, max_records: int
+) -> Iterator[dict]:
+    """The shard's records from ``begin`` to its current tip (or to its
+    end, once closed: a closed, drained shard returns a null
+    NextShardIterator), in sequence order. Lazy: GetRecords is called
+    only while the caller keeps iterating, so a caller that stops at a
+    bound makes no further page requests."""
+    it = _get_iterator(client, stream, shard_id, begin)
+    stalled, prev_behind = 0, None
+    while it:
+        page = client.get_records(ShardIterator=it, Limit=max_records)
+        records = page.get("Records", [])
+        yield from records
+        it = page.get("NextShardIterator")
+        behind = page.get("MillisBehindLatest", 0)
+        if records:
+            stalled = 0
+        elif behind == 0:
+            return  # caught the tip
+        else:
+            # stall guard: empty pages are normal mid-drain, but a run of
+            # them with no MillisBehindLatest progress means a throttled
+            # or stuck endpoint — fail the task loudly rather than spin
+            # forever (offsets are untouched, so a retry re-reads the
+            # same range)
+            progressed = prev_behind is None or behind < prev_behind
+            stalled = 0 if progressed else stalled + 1
+            if stalled > _MAX_STALLED_PAGES:
+                raise RuntimeError(
+                    f"kinesis_py: shard {shard_id} stalled: {stalled} "
+                    "consecutive empty GetRecords pages with no "
+                    f"MillisBehindLatest progress (still {behind} ms behind)"
+                )
+        prev_behind = behind
+
+
 def _drain_range(
     client,
     stream: str,
@@ -250,22 +280,14 @@ def _drain_range(
     end_seq: str,
     max_records: int,
 ) -> Iterator[tuple]:
-    """Exactly the records with begin < sequence <= end_seq from one
-    shard (begin may be a TRIM/AT_TS anchor). The shared replay core:
-    ``readBetweenOffsets`` failure replay and the partitioned reader's
-    executor-side ``read`` are the same contract — deterministic batch
-    content from offset bounds alone."""
-    it = _get_iterator(client, stream, shard_id, begin)
-    while it:
-        page = client.get_records(ShardIterator=it, Limit=max_records)
-        for rec in page.get("Records", []):
-            if int(rec["SequenceNumber"]) > int(end_seq):
-                return
-            yield _record_row(stream, shard_id, rec)
-            if str(rec["SequenceNumber"]) == str(end_seq):
-                return
-        it = page.get("NextShardIterator")
-        if not page.get("Records") and page.get("MillisBehindLatest", 0) == 0:
+    """Exactly the records from ``begin`` (a TRIM/AT_TS anchor) through
+    sequence ``end_seq`` inclusive from one shard — the closing batch
+    of a tombstoned reshard parent."""
+    for rec in _records(client, stream, shard_id, begin, max_records):
+        if int(rec["SequenceNumber"]) > int(end_seq):
+            return
+        yield _record_row(stream, shard_id, rec)
+        if str(rec["SequenceNumber"]) == str(end_seq):
             return
 
 
@@ -279,7 +301,7 @@ def _drain_until_boundary(
 ) -> Iterator[tuple]:
     """Exactly the records in arrival-position interval
     ``[position(begin), position(boundary))`` from one shard — the
-    partitioned reader's executor-side drain. Stops AT the first record
+    executor-side drain of an open shard. Stops AT the first record
     whose server-side arrival stamp reaches ``boundary`` (that record
     is ``position(boundary)``, the next batch's start), or at the shard
     tip. Deterministic on replay: records are immutable, any record
@@ -288,217 +310,10 @@ def _drain_until_boundary(
     behind the driver's (latestOffset returns only once the boundary is
     lag-deep in the past), and the stop rule is a pure function of the
     stored stamps."""
-    it = _get_iterator(client, stream, shard_id, begin)
-    while it:
-        page = client.get_records(ShardIterator=it, Limit=max_records)
-        for rec in page.get("Records", []):
-            if rec["ApproximateArrivalTimestamp"].timestamp() >= boundary:
-                return  # position(boundary): the next batch starts here
-            yield _record_row(stream, shard_id, rec)
-        it = page.get("NextShardIterator")
-        if not page.get("Records") and page.get("MillisBehindLatest", 0) == 0:
-            return  # caught the tip: all retained records precede the boundary
-
-
-class KinesisSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Driver-side shard poller implementing Spark's simple streaming
-    read contract. Spark persists what ``read`` returns until the batch
-    commits; ``readBetweenOffsets`` re-derives a batch from the API on
-    failure replay (exact per-shard sequence bounds)."""
-
-    def __init__(self, options: dict):
-        self._options = {k.lower(): v for k, v in dict(options).items()}
-        self._stream = self._options.get("streamname")
-        if not self._stream:
-            raise ValueError("kinesis_py requires the streamName option")
-        self._max_records = int(
-            self._options.get("maxfetchrecordspershard", DEFAULT_MAX_RECORDS)
-        )
-        # per-shard page cap per micro-batch: 0 (default) = drain until
-        # caught up, which is what availableNow's single-batch fallback
-        # needs for a complete snapshot; set it for continuous triggers
-        # to bound batch size — truncation is NOT data loss there (the
-        # next trigger continues from the committed offsets), but under
-        # availableNow it would be, which is why unbounded is the
-        # default (review finding: a silent 20-page cap could truncate
-        # a single-batch drain)
-        self._max_pages = int(self._options.get("maxpagesperbatch", 0))
-        self._boto = None
-
-    def __getstate__(self) -> dict:
-        # boto3 clients hold live sockets and never pickle; the
-        # partitioned reader (which owns one of these for option parsing
-        # and shard listing) is serialized to executors for read(partition)
-        state = dict(self.__dict__)
-        state["_boto"] = None
-        return state
-
-    def _c(self):
-        if self._boto is None:
-            self._boto = _client(self._options)
-        return self._boto
-
-    def _list_shards(self) -> list[dict]:
-        # ListShards, not DescribeStream: the real API caps
-        # DescribeStream at 10 TPS account-wide while ListShards (the
-        # purpose-built call) allows 100 TPS — one listing per
-        # micro-batch across a few queries would throttle on the
-        # control-plane call otherwise (review finding). The full shard
-        # dicts are kept: ParentShardId / AdjacentParentShardId drive
-        # the parent-before-child admission rule in ``_advance``.
-        shards: list[dict] = []
-        token = None
-        while True:
-            kwargs = (
-                {"NextToken": token} if token else {"StreamName": self._stream}
-            )
-            page = self._c().list_shards(**kwargs)
-            shards.extend(page.get("Shards", []))
-            token = page.get("NextToken")
-            if not token:
-                return shards
-
-    def initialOffset(self) -> dict:
-        pos = self._options.get("initialposition", "TRIM_HORIZON").upper()
-        if pos == "TRIM_HORIZON":
-            anchor = TRIM
-        elif pos == "LATEST":
-            # the replayable tip anchor: AT_TIMESTAMP(query start). A
-            # LATEST iterator token can't live in a checkpoint or be
-            # re-created for replay; the arrival-timestamp anchor can.
-            # Rounded UP to the NEXT whole second (int(now) + 1):
-            # botocore serializes the Timestamp wire param as INTEGER
-            # epoch seconds, so a fractional anchor would truncate DOWN
-            # and re-admit records that arrived earlier in the same
-            # second — before query start. The next-second form keeps
-            # LATEST strict ("only records arriving after start") at
-            # the cost of a <1 s admission blind spot at startup, and
-            # deliberately matches the partitioned reader's boundary
-            # formula exactly: an ANCHOR computed at t1 can then never
-            # exceed a BOUNDARY computed at t2 >= t1, even across the
-            # engine's separate planner processes where no in-memory
-            # state is shared (a ceil(now + epsilon) variant could jump
-            # TWO seconds ahead within epsilon of a second boundary and
-            # plan a batch whose end precedes its start).
-            anchor = AT_TS + str(int(time.time()) + 1)
-        elif pos == "AT_TIMESTAMP":
-            ts = self._options.get("initialpositiontimestamp")
-            if ts is None:
-                raise ValueError(
-                    "kinesis_py initialPosition=AT_TIMESTAMP requires the "
-                    "initialPositionTimestamp option (epoch seconds)"
-                )
-            anchor = AT_TS + repr(float(ts))
-        else:
-            raise ValueError(
-                "kinesis_py supports initialPosition TRIM_HORIZON | LATEST "
-                f"| AT_TIMESTAMP, got {pos!r}"
-            )
-        return {s["ShardId"]: anchor for s in self._list_shards()}
-
-    def _advance(self, start: dict) -> tuple[list[tuple], dict]:
-        """One micro-batch advance: page each shard forward from its
-        position until caught up (or until ``maxPagesPerBatch`` when
-        set), admitting shards created since the last batch at
-        TRIM_HORIZON (post-reshard children) and RETIRING shards that
-        close after a full drain (tombstoned with their final sequence
-        so the closing batch stays replayable, never polled again
-        afterwards).
-
-        Parent-before-child admission (ADVICE r8): a never-read shard
-        whose (Adjacent)ParentShardId is still tracked and not yet
-        tombstoned CLOSED is deferred — without this, a page-capped
-        parent drain could emit a key's child-shard records in an
-        earlier batch than its remaining parent records, breaking the
-        per-key ordering the reference connector (and this repo's
-        KinesisMicroBatchPoller) preserve. Under the default unbounded
-        drain a listed parent always tombstones earlier in the same
-        loop (start offsets iterate first, ListShards returns parents
-        before their children), so children are never deferred across
-        batches there."""
-        offsets = dict(start)
-        listed = self._list_shards()
-        parents = {
-            s["ShardId"]: [
-                p
-                for p in (s.get("ParentShardId"), s.get("AdjacentParentShardId"))
-                if p
-            ]
-            for s in listed
-        }
-        for s in listed:
-            offsets.setdefault(s["ShardId"], TRIM)
-        rows: list[tuple] = []
-        out = dict(offsets)
-        for shard_id, seq in offsets.items():
-            if seq.startswith(CLOSED):
-                continue  # retired reshard parent: fully consumed
-            if seq == TRIM and any(
-                p in out and not out[p].startswith(CLOSED)
-                for p in parents.get(shard_id, [])
-            ):
-                # never-read reshard child with an undrained parent:
-                # deferred (stays TRIM) until the parent tombstones
-                continue
-            it = _get_iterator(self._c(), self._stream, shard_id, seq)
-            last = seq
-            pages = 0
-            while it:
-                page = self._c().get_records(
-                    ShardIterator=it, Limit=self._max_records
-                )
-                for rec in page.get("Records", []):
-                    rows.append(_record_row(self._stream, shard_id, rec))
-                    last = str(rec["SequenceNumber"])
-                it = page.get("NextShardIterator")
-                pages += 1
-                if page.get("MillisBehindLatest", 0) == 0 and not page.get(
-                    "Records"
-                ):
-                    break
-                if self._max_pages and pages >= self._max_pages:
-                    break  # deferred to the next trigger, not lost
-            if it is None:
-                # NextShardIterator null = shard CLOSED and drained
-                out[shard_id] = CLOSED + ("" if _is_anchor(last) else last)
-            else:
-                out[shard_id] = last
-        return rows, out
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        rows, out = self._advance(start)
-        return iter(rows), out
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        """Failure replay: exactly the records with
-        start[shard] < sequence <= end[shard], per shard (numeric-string
-        sequence comparison; Kinesis sequences strictly increase)."""
-        for shard_id, end_seq in end.items():
-            if end_seq.startswith(CLOSED):
-                # the closing batch's bound is preserved inside the
-                # tombstone; an empty payload means the shard closed
-                # without this query ever reading a record from it
-                end_seq = end_seq[len(CLOSED):]
-                if not end_seq:
-                    continue
-            if _is_anchor(end_seq):
-                continue  # nothing was read from this shard in the batch
-            begin = start.get(shard_id, TRIM)
-            if begin.startswith(CLOSED):
-                continue  # retired before this batch: nothing to replay
-            if not _is_anchor(begin) and int(begin) >= int(end_seq):
-                continue
-            yield from _drain_range(
-                self._c(),
-                self._stream,
-                shard_id,
-                begin,
-                end_seq,
-                self._max_records,
-            )
-
-    def commit(self, end: dict) -> None:  # offsets live in Spark's checkpoint
-        pass
+    for rec in _records(client, stream, shard_id, begin, max_records):
+        if rec["ApproximateArrivalTimestamp"].timestamp() >= boundary:
+            return  # position(boundary): the next batch starts here
+        yield _record_row(stream, shard_id, rec)
 
 
 @dataclass
@@ -512,12 +327,11 @@ class ShardPartition(InputPartition):
 @dataclass
 class ShardRangePartition(InputPartition):
     """One streaming input partition per shard per micro-batch: exact
-    replayable bounds, drained executor-side. ``start`` is exclusive (a
-    TRIM/AT_TS anchor or a sequence); ``end`` is either an
-    ``<AT_TS>:``-prefixed whole-second arrival-time boundary (open
-    shard: drain up to, not including, the first record whose arrival
-    stamp reaches it) or a bare inclusive sequence number (closing
-    batch of a tombstoned reshard parent)."""
+    replayable bounds, drained executor-side. ``start`` is a TRIM/AT_TS
+    anchor; ``end`` is either an ``<AT_TS>:``-prefixed whole-second
+    arrival-time boundary (open shard: drain up to, not including, the
+    first record whose arrival stamp reaches it) or a bare inclusive
+    sequence number (closing batch of a tombstoned reshard parent)."""
 
     shard_id: str
     start: str
@@ -526,8 +340,8 @@ class ShardRangePartition(InputPartition):
 
 class KinesisPartitionedStreamReader(DataSourceStreamReader):
     """EXECUTOR-PARALLEL streaming reads through the registered format
-    (VERDICT r8 #3 — ``option("reader", "partitioned")``): the full
-    ``DataSourceStreamReader`` contract with METADATA-ONLY driver work.
+    (VERDICT r8 #3): the full ``DataSourceStreamReader`` contract with
+    METADATA-ONLY driver work.
 
     Per trigger, ``latestOffset`` makes exactly one ListShards call and
     picks a whole-second arrival-time boundary — it never calls
@@ -554,8 +368,21 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
     the driver pays one metadata call."""
 
     def __init__(self, options: dict):
-        self._meta = KinesisSimpleStreamReader(options)
-        self._options = self._meta._options
+        self._options = _parse_options(options)
+        self._stream = self._options["streamname"]
+        # the only streaming reader: accept the old explicit opt-in
+        # (``reader=partitioned``), refuse anything else rather than
+        # silently run a different mode than the caller asked for
+        mode = str(self._options.get("reader", "partitioned")).lower()
+        if mode != "partitioned":
+            raise ValueError(
+                f"kinesis_py has one streaming reader, got reader={mode!r} "
+                "(drop the option or set it to 'partitioned')"
+            )
+        # driver-side metadata client, built on first use and never
+        # pickled (boto3 clients hold live sockets); executors build
+        # their own in read()
+        self._boto = None
         # optional catch-up bound: cap each trigger's arrival-time span
         # (seconds) so a query resuming after long downtime advances in
         # bounded batches instead of one giant interval. Purely a batch-
@@ -592,6 +419,52 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # end anchors where the API lets us see them.
         self._last_boundary: int | None = None
 
+    def __getstate__(self) -> dict:
+        state = dict(self.__dict__)
+        state["_boto"] = None
+        return state
+
+    def _list_shards(self) -> list[dict]:
+        if self._boto is None:
+            self._boto = _client(self._options)
+        return _list_shards(self._boto, self._stream)
+
+    def _initial_anchor(self) -> str:
+        pos = self._options.get("initialposition", "TRIM_HORIZON").upper()
+        if pos == "TRIM_HORIZON":
+            return TRIM
+        if pos == "LATEST":
+            # the replayable tip anchor: AT_TIMESTAMP(query start). A
+            # LATEST iterator token can't live in a checkpoint or be
+            # re-created for replay; the arrival-timestamp anchor can.
+            # Rounded UP to the NEXT whole second (int(now) + 1):
+            # botocore serializes the Timestamp wire param as INTEGER
+            # epoch seconds, so a fractional anchor would truncate DOWN
+            # and re-admit records that arrived earlier in the same
+            # second — before query start. The next-second form keeps
+            # LATEST strict ("only records arriving after start") at
+            # the cost of a <1 s admission blind spot at startup, and
+            # deliberately matches latestOffset's boundary formula
+            # exactly: an ANCHOR computed at t1 can then never exceed a
+            # BOUNDARY computed at t2 >= t1, even across the engine's
+            # separate planner processes where no in-memory state is
+            # shared (a ceil(now + epsilon) variant could jump TWO
+            # seconds ahead within epsilon of a second boundary and
+            # plan a batch whose end precedes its start).
+            return AT_TS + str(int(time.time()) + 1)
+        if pos == "AT_TIMESTAMP":
+            ts = self._options.get("initialpositiontimestamp")
+            if ts is None:
+                raise ValueError(
+                    "kinesis_py initialPosition=AT_TIMESTAMP requires the "
+                    "initialPositionTimestamp option (epoch seconds)"
+                )
+            return AT_TS + repr(float(ts))
+        raise ValueError(
+            "kinesis_py supports initialPosition TRIM_HORIZON | LATEST "
+            f"| AT_TIMESTAMP, got {pos!r}"
+        )
+
     def _seed_boundary_floor(self, positions) -> None:
         # ceil, not int(): a fractional explicit AT_TIMESTAMP anchor
         # floored here would put the floor BELOW the anchor, and the
@@ -617,7 +490,8 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         # batch boundary, planning a batch whose start exceeds its end
         # (ADVICE r9's cache-the-anchor prescription).
         if self._initial is None:
-            out = self._meta.initialOffset()
+            anchor = self._initial_anchor()
+            out = {s["ShardId"]: anchor for s in self._list_shards()}
             self._seed_boundary_floor(out.values())
             self._initial = out
         return dict(self._initial)
@@ -629,7 +503,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
             # trigger's boundary can never precede the anchor the
             # engine will log as the query's start
             self.initialOffset()
-        listed = self._meta._list_shards()
+        listed = self._list_shards()
         # next whole second (lag-shifted): integral because the
         # GetShardIterator Timestamp wire param carries integer epoch
         # seconds (botocore serializer), so executors can resolve
@@ -721,6 +595,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
                 bound = end_pos[len(CLOSED):]
                 if not bound:
                     continue  # degenerate tombstone: nothing readable
+                _check_start(shard_id, begin)
                 # closing batch: drain the shard's whole remainder to
                 # its metadata end — records past the time boundary are
                 # deliberately included (the set is frozen by closure,
@@ -747,6 +622,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
                             "clock moved backwards across a restart; "
                             "refusing to plan a regressed batch"
                         )
+                _check_start(shard_id, begin)
                 parts.append(ShardRangePartition(shard_id, begin, end_pos))
             elif end_pos == TRIM:
                 continue  # nothing was ever readable for this shard
@@ -767,14 +643,11 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
     def read(self, partition: ShardRangePartition) -> Iterator[tuple]:
         # executor-side: own client, own shard, exact range drain
         client = _client(self._options)
-        stream = self._options["streamname"]
-        max_records = int(
-            self._options.get("maxfetchrecordspershard", DEFAULT_MAX_RECORDS)
-        )
+        max_records = _max_records(self._options)
         if partition.end.startswith(AT_TS):
             yield from _drain_until_boundary(
                 client,
-                stream,
+                self._stream,
                 partition.shard_id,
                 partition.start,
                 float(partition.end[len(AT_TS):]),
@@ -783,7 +656,7 @@ class KinesisPartitionedStreamReader(DataSourceStreamReader):
         else:
             yield from _drain_range(
                 client,
-                stream,
+                self._stream,
                 partition.shard_id,
                 partition.start,
                 partition.end,
@@ -799,41 +672,30 @@ class KinesisBatchReader(DataSourceReader):
     ``spark.read.format("kinesis_py")`` plans one InputPartition per
     shard (discovered at planning time on the driver), and each
     executor task builds its OWN boto3 client and drains its shard from
-    TRIM_HORIZON to the current tip — the same shards-fan-out shape as
-    ``kinesis_dev.py``'s executor-parallel poller, but through Spark's
-    public DataSource partition planning instead of a hand-rolled
-    mapInPandas. At 1000 shards this is 1000 parallel tasks, no driver
-    bottleneck; the driver only lists shards."""
+    TRIM_HORIZON to the current tip through Spark's public DataSource
+    partition planning. At 1000 shards this is 1000 parallel tasks, no
+    driver bottleneck; the driver only lists shards."""
 
     def __init__(self, options: dict):
-        self._options = {k.lower(): v for k, v in dict(options).items()}
-        self._stream = self._options.get("streamname")
-        if not self._stream:
-            raise ValueError("kinesis_py requires the streamName option")
+        self._options = _parse_options(options)
+        self._stream = self._options["streamname"]
 
     def partitions(self) -> list[ShardPartition]:
         # driver-side: shard listing only (metadata call, no records)
-        reader = KinesisSimpleStreamReader(self._options)
-        return [ShardPartition(s["ShardId"]) for s in reader._list_shards()]
+        shards = _list_shards(_client(self._options), self._stream)
+        return [ShardPartition(s["ShardId"]) for s in shards]
 
     def read(self, partition: ShardPartition) -> Iterator[tuple]:
         # executor-side: own client, own shard, full drain
-        opts = self._options
-        stream = self._stream
-        client = _client(opts)
-        max_records = int(opts.get("maxfetchrecordspershard", DEFAULT_MAX_RECORDS))
-        it = client.get_shard_iterator(
-            StreamName=stream,
-            ShardId=partition.shard_id,
-            ShardIteratorType="TRIM_HORIZON",
-        )["ShardIterator"]
-        while it:
-            page = client.get_records(ShardIterator=it, Limit=max_records)
-            for rec in page.get("Records", []):
-                yield _record_row(stream, partition.shard_id, rec)
-            it = page.get("NextShardIterator")
-            if not page.get("Records") and page.get("MillisBehindLatest", 0) == 0:
-                break
+        client = _client(self._options)
+        for rec in _records(
+            client,
+            self._stream,
+            partition.shard_id,
+            TRIM,
+            _max_records(self._options),
+        ):
+            yield _record_row(self._stream, partition.shard_id, rec)
 
 
 class KinesisPythonDataSource(DataSource):
@@ -855,18 +717,9 @@ class KinesisPythonDataSource(DataSource):
         )
 
     def streamReader(self, schema) -> KinesisPartitionedStreamReader:
-        """Executor-parallel streaming path, opted into with
-        ``option("reader", "partitioned")``; anything else raises
-        Spark's NOT_IMPLEMENTED, which makes the engine fall back to
-        ``simpleStreamReader`` below (the documented selection contract
-        of the Python DataSource API)."""
-        opts = {k.lower(): v for k, v in dict(self.options).items()}
-        if opts.get("reader", "simple").lower() == "partitioned":
-            return KinesisPartitionedStreamReader(self.options)
-        return super().streamReader(schema)
-
-    def simpleStreamReader(self, schema) -> KinesisSimpleStreamReader:
-        return KinesisSimpleStreamReader(self.options)
+        """Executor-parallel streaming path: metadata-only offsets on
+        the driver, one task per shard per micro-batch."""
+        return KinesisPartitionedStreamReader(self.options)
 
     def reader(self, schema) -> KinesisBatchReader:
         """Batch snapshot path: ``spark.read.format("kinesis_py")`` —

@@ -7,6 +7,9 @@ Here the source is a factory keyed by kind:
 
 - ``kinesis``  — production path via the Kinesis Structured Streaming
   connector (connector jar not present in this environment; gated).
+  Its jar-free twin is the registered ``format("kinesis_py")`` source
+  (``kinesis_pysource.py``): the same binary ``data`` schema, so the
+  same ``decode_payload`` step follows either.
 - ``file``     — parquet/json/text directory stream (tests, replay).
 - ``rate``     — synthetic generator reproducing the reference's data
   generator (sources/generator.py).

@@ -5,9 +5,9 @@ Three layers of coverage, by what the environment allows:
 1. **Always** — factory plumbing: the ``kinesis`` branch must march all
    the way to Spark's connector lookup (the jar is absent here), and
    the poll tuning must mirror the reference's consumer config.
-2. **Always (r4)** — a REAL produce→consume round-trip through the
-   boto3-backed dev consumer (``streaming/kinesis_dev.py``) against a
-   vendored in-process fake of the public Kinesis HTTP API
+2. **Always** — a REAL produce→consume round-trip through the jar-free
+   consumer (``spark.read.format("kinesis_py")``) against a vendored
+   in-process fake of the public Kinesis HTTP API
    (``tests/fake_kinesis.py``): gzip'd reference-format records go in
    via ``PutRecords``, come back out via shard iterators, gunzip, and
    parse — the produce→consume semantics the reference validates only
@@ -20,12 +20,13 @@ Three layers of coverage, by what the environment allows:
 4. **Always (driver-r8)** — a REAL registered Spark source without any
    jar: ``format("kinesis_py")`` via Spark 4's public Python DataSource
    API (``streaming/kinesis_pysource.py``) — engine-managed offsets,
-   checkpoint restart exactly-once, readBetweenOffsets failure replay —
+   checkpoint restart exactly-once, failure replay from offset bounds —
    all executed against the in-process fake endpoint.
 """
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import os
 
@@ -172,6 +173,47 @@ class _VClock:
         self.now += dt
 
 
+@contextlib.contextmanager
+def _virtual_kinesis(start):
+    """A fake endpoint and the partitioned reader sharing one
+    ``_VClock``: yields ``(clock, fake)``."""
+    from unittest import mock
+
+    from kda_flink_app_timestream_spark.streaming import kinesis_fake
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
+
+    clock = _VClock(start)
+    with mock.patch.object(kinesis_fake, "time", clock), mock.patch.object(
+        kps, "time", clock
+    ), kinesis_fake.FakeKinesis() as fk:
+        yield clock, fk
+
+
+def _reader(fk, stream, **options):
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPartitionedStreamReader,
+    )
+
+    return KinesisPartitionedStreamReader(
+        {
+            "streamname": stream,
+            "endpointurl": fk.endpoint_url,
+            "accesskeyid": "t",
+            "secretaccesskey": "t",
+            **options,
+        }
+    )
+
+
+def _drain(reader, start, end) -> list[str]:
+    """One micro-batch's payloads, planned and read as Spark would."""
+    return [
+        bytes(r[0]).decode()
+        for p in reader.partitions(start, end)
+        for r in reader.read(p)
+    ]
+
+
 def _fake_client(fk):
     boto3 = pytest.importorskip("boto3")
     return boto3.client(
@@ -183,16 +225,36 @@ def _fake_client(fk):
     )
 
 
+def _kinesis_py_batch(spark, fk, stream, **options):
+    """``spark.read.format("kinesis_py")`` over the fake endpoint."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPythonDataSource,
+    )
+
+    spark.dataSource.register(KinesisPythonDataSource)
+    reader = (
+        spark.read.format("kinesis_py")
+        .option("streamName", stream)
+        .option("endpointUrl", fk.endpoint_url)
+        .option("accessKeyId", "test")
+        .option("secretAccessKey", "test")
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
 def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
     """Produce→consume round-trip with the reference's exact wire
     semantics: gzip'd multi-line service-log blobs keyed by account id
     (timestream_kinesis_data_gen.py:75-78) through a 2-shard stream,
-    drained by the dev consumer, gunzipped, and parsed."""
+    drained by the registered ``kinesis_py`` batch reader, gunzipped,
+    and parsed."""
+    from pyspark.sql import functions as SF
+
     from kda_flink_app_timestream_spark.functions.parse import parse_service_logs
     from kda_flink_app_timestream_spark.sources.generator import service_log_batch
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
+    from kda_flink_app_timestream_spark.streaming.source import decode_payload
 
     from .fake_kinesis import FakeKinesis
 
@@ -213,25 +275,29 @@ def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
                 for v, pk in produced
             ],
         )
-        df = kinesis_snapshot_read(
-            spark,
-            "svc-logs",
-            boto3_client=client,
-            decode="gzip",
-        ).cache()
+        df = (
+            _kinesis_py_batch(spark, fk, "svc-logs")
+            .select(
+                decode_payload(SF.col("data"), codec="gzip").alias("value"),
+                "partitionKey",
+                "sequenceNumber",
+                "shardId",
+            )
+            .cache()
+        )
 
         rows = df.collect()
         assert sorted(r["value"] for r in rows) == sorted(v for v, _ in produced)
         # both shards carried data and per-shard order is preserved
         by_shard = {}
         for r in rows:
-            by_shard.setdefault(r["shard_id"], []).append(int(r["sequence_number"]))
+            by_shard.setdefault(r["shardId"], []).append(int(r["sequenceNumber"]))
         assert len(by_shard) == 2, f"expected 2 shards, got {list(by_shard)}"
         for seqs in by_shard.values():
             assert seqs == sorted(seqs)
         # partition key routing is consistent: one shard per key
         key_shards = {
-            (r["partition_key"], r["shard_id"]) for r in rows
+            (r["partitionKey"], r["shardId"]) for r in rows
         }
         keys = {k for k, _ in key_shards}
         assert len(key_shards) == len(keys)
@@ -241,16 +307,13 @@ def test_kinesis_roundtrip_against_in_process_fake_endpoint(spark):
         parsed = parse_service_logs(df)
         assert parsed.count() == len(produced)
         assert parsed.filter("measure_value_double IS NULL").count() == 0
+        df.unpersist()
 
 
 def test_kinesis_snapshot_paginates_get_records(spark):
     """A shard deeper than one GetRecords page must be drained across
     multiple calls (the reference polls 10000/call; here 7/call over 25
     records forces 4+ pages)."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
-
     from .fake_kinesis import FakeKinesis
 
     with FakeKinesis() as fk:
@@ -260,20 +323,21 @@ def test_kinesis_snapshot_paginates_get_records(spark):
             client.put_record(
                 StreamName="deep", Data=f"rec-{i:02d}".encode(), PartitionKey="k"
             )
-        df = kinesis_snapshot_read(
-            spark, "deep", boto3_client=client, max_records_per_get=7
-        )
-        got = sorted(r["value"] for r in df.collect())
+        df = _kinesis_py_batch(spark, fk, "deep", maxFetchRecordsPerShard="7")
+        got = sorted(bytes(r["data"]).decode() for r in df.collect())
         assert got == [f"rec-{i:02d}" for i in range(25)]
+        assert len(fk.get_records_log) >= 4, fk.get_records_log
+        assert {limit for _shard, limit in fk.get_records_log} == {7}
 
 
 def test_kinesis_snapshot_utf8_when_not_decoding(spark):
-    """decode='none' must honor the connector contract (CAST(data AS
+    """Without gunzip the connector contract holds (CAST(data AS
     STRING) = UTF-8): non-ASCII payloads come back as real text, not
-    latin-1 mojibake; the gzip path still round-trips bytes exactly."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        kinesis_snapshot_read,
-    )
+    latin-1 mojibake; the gzip decode path still round-trips bytes
+    exactly."""
+    from pyspark.sql import functions as SF
+
+    from kda_flink_app_timestream_spark.streaming.source import decode_payload
 
     from .fake_kinesis import FakeKinesis
 
@@ -285,806 +349,15 @@ def test_kinesis_snapshot_utf8_when_not_decoding(spark):
         client.put_record(
             StreamName="u8", Data=gzip.compress(text.encode("utf-8")), PartitionKey="k"
         )
-        plain = kinesis_snapshot_read(spark, "u8", boto3_client=client).collect()
+        df = _kinesis_py_batch(spark, fk, "u8").orderBy(
+            SF.col("sequenceNumber").cast("long")
+        )
+        plain = df.select(SF.col("data").cast("string").alias("value")).collect()
         assert plain[0]["value"] == text
-        decoded = kinesis_snapshot_read(
-            spark, "u8", boto3_client=client, decode="gzip"
+        decoded = df.select(
+            decode_payload(SF.col("data"), codec="gzip").alias("value")
         ).collect()
         assert decoded[1]["value"] == text
-
-
-def test_incremental_poller_three_polls_exactly_once(spark, tmp_path):
-    """The CONTINUOUS jar-free consumer (VERDICT r4 #1): three produce
-    waves, three incremental polls — each batch contains exactly the
-    new records, the union equals a batch-oracle snapshot of the whole
-    stream, and an uncommitted batch replays byte-identically (even
-    when newer records arrived in between) before the stream advances."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-        kinesis_snapshot_read,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="inc", ShardCount=2)
-
-        def put_wave(tag, n):
-            client.put_records(
-                StreamName="inc",
-                Records=[
-                    {"Data": f"{tag}-{i}".encode(), "PartitionKey": f"k{i % 5}"}
-                    for i in range(n)
-                ],
-            )
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "inc",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
-
-        batches = {}
-        for wave, n in (("a", 12), ("b", 7), ("c", 9)):
-            put_wave(wave, n)
-            bid, df = poller.poll()
-            batches[bid] = sorted(r["value"] for r in df.collect())
-            poller.commit(bid)
-
-        assert list(batches) == [0, 1, 2]
-        assert batches[0] == sorted(f"a-{i}" for i in range(12))
-        assert batches[1] == sorted(f"b-{i}" for i in range(7))
-        assert batches[2] == sorted(f"c-{i}" for i in range(9))
-
-        # batch oracle: the union of incremental batches IS the stream
-        snapshot = sorted(
-            r["value"]
-            for r in kinesis_snapshot_read(spark, "inc", boto3_client=client).collect()
-        )
-        assert snapshot == sorted(v for vs in batches.values() for v in vs)
-
-        # exactly-once boundary: batch 3 polled but NOT committed, new
-        # records arrive, a recovered poller re-delivers batch 3 with
-        # its ORIGINAL membership; wave e lands in batch 4
-        put_wave("d", 5)
-        bid3, df3 = poller.poll()
-        original = sorted(r["value"] for r in df3.collect())
-        assert original == sorted(f"d-{i}" for i in range(5))
-        put_wave("e", 4)
-
-        recovered = KinesisMicroBatchPoller(
-            spark,
-            "inc",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
-        rbid, rdf = recovered.poll()
-        assert rbid == bid3 == 3
-        assert sorted(r["value"] for r in rdf.collect()) == original
-        recovered.commit(rbid)
-        bid4, df4 = recovered.poll()
-        assert bid4 == 4
-        assert sorted(r["value"] for r in df4.collect()) == sorted(
-            f"e-{i}" for i in range(4)
-        )
-
-
-def test_incremental_poller_resharding_split_then_merge(spark, tmp_path):
-    """Reshard lifecycle through the poll loop: records before a
-    SplitShard, after it (routed to the children), and after a
-    MergeShards of the children — every record consumed exactly once,
-    children admitted only after their parents are drained+retired
-    (the KCL/connector parent-before-child ordering rule)."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="resh", ShardCount=1)
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "resh",
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            boto3_client=client,
-            interval_millis=0,
-        )
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="resh",
-                Records=[
-                    {"Data": f"{tag}-{i}".encode(), "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        put("pre", 8)
-        parent = client.list_shards(StreamName="resh")["Shards"][0]
-        mid = (1 << 127)  # split the full range at the midpoint
-
-        client.split_shard(
-            StreamName="resh",
-            ShardToSplit=parent["ShardId"],
-            NewStartingHashKey=str(mid),
-        )
-        put("post", 10)  # routes to the two children
-
-        bid0, df0 = poller.poll()
-        poller.commit(bid0)
-        got0 = sorted(r["value"] for r in df0.collect())
-        # parent drained in this poll; children were admitted in the same
-        # discovery pass only if the parent was already retired — the
-        # parent retires DURING this poll, so children may land here or
-        # in the next poll; either way nothing is lost or duplicated
-        bid1, df1 = poller.poll()
-        poller.commit(bid1)
-        got1 = sorted(r["value"] for r in df1.collect())
-        all_so_far = sorted(got0 + got1)
-        assert all_so_far == sorted(
-            [f"pre-{i}" for i in range(8)] + [f"post-{i}" for i in range(10)]
-        )
-        # the parent's records were read before any child's (retired
-        # parent precedes child admission across polls)
-        assert got0[:1] and set(got0[:8]) >= {f"pre-{i}" for i in range(8)} or (
-            set(got0) == {f"pre-{i}" for i in range(8)}
-        )
-
-        shards = client.list_shards(StreamName="resh")["Shards"]
-        children = [
-            s
-            for s in shards
-            if s.get("ParentShardId") == parent["ShardId"]
-            and "EndingSequenceNumber" not in s["SequenceNumberRange"]
-        ]
-        assert len(children) == 2
-        client.merge_shards(
-            StreamName="resh",
-            ShardToMerge=children[0]["ShardId"],
-            AdjacentShardToMerge=children[1]["ShardId"],
-        )
-        put("merged", 6)
-
-        collected = []
-        for _ in range(3):  # children drain, then the merged shard admits
-            bid, df = poller.poll()
-            poller.commit(bid)
-            collected += [r["value"] for r in df.collect()]
-        assert sorted(collected) == sorted(f"merged-{i}" for i in range(6))
-
-
-def test_incremental_poller_stall_guard(spark, tmp_path):
-    """A throttled endpoint that keeps returning empty pages with no
-    MillisBehindLatest progress must fail LOUDLY (the checkpoint wasn't
-    advanced, so the next poll retries cleanly) — never spin forever."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    class StuckClient:
-        def list_shards(self, **kw):
-            return {"Shards": [{"ShardId": "shardId-000000000000"}]}
-
-        def get_shard_iterator(self, **kw):
-            return {"ShardIterator": "it0"}
-
-        def get_records(self, **kw):
-            return {
-                "Records": [],
-                "NextShardIterator": "it0",
-                "MillisBehindLatest": 5000,  # forever behind, never progresses
-            }
-
-    poller = KinesisMicroBatchPoller(
-        spark,
-        "stuck",
-        checkpoint_dir=str(tmp_path / "ck"),
-        boto3_client=StuckClient(),
-        interval_millis=0,
-    )
-    with pytest.raises(RuntimeError, match="stalled on shard"):
-        poller.poll()
-    # nothing was checkpointed: recovery starts batch 0 from scratch
-    import os
-
-    assert os.listdir(str(tmp_path / "ck" / "offsets")) == []
-
-
-class _LimitSpy:
-    """Delegating wrapper that records the Limit of every GetRecords."""
-
-    def __init__(self, client):
-        self._client = client
-        self.limits: list[int] = []
-
-    def get_records(self, **kw):
-        self.limits.append(kw.get("Limit"))
-        return self._client.get_records(**kw)
-
-    def __getattr__(self, name):
-        return getattr(self._client, name)
-
-
-def test_adapt_limit_formula():
-    """SHARD_USE_ADAPTIVE_READS sizing (StreamingJob.java:84-89): next
-    Limit = 2 MiB/s * interval / avg_record_size, clamped to
-    [1, SHARD_GETRECORDS_MAX]; an empty batch keeps the current limit."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        SHARD_GETRECORDS_MAX,
-        _adapt_limit,
-    )
-
-    # 2048-byte records at a 1 s interval -> 2 MiB / 2 KiB = 1024
-    assert _adapt_limit(10 * 2048, 10, 1000, 10000) == 1024
-    # halve the interval -> half the budget per fetch
-    assert _adapt_limit(10 * 2048, 10, 500, 10000) == 512
-    # tiny records would exceed the API max -> clamped down
-    assert _adapt_limit(100 * 10, 100, 1000, 10000) == SHARD_GETRECORDS_MAX
-    # huge records -> floor of 1
-    assert _adapt_limit(4 * (4 << 20), 4, 1000, 10000) == 1
-    # no size signal -> unchanged
-    assert _adapt_limit(0, 0, 1000, 777) == 777
-    # no poll interval (unpaced dev/test drain) -> no byte budget to
-    # size against; keep current instead of collapsing to Limit=1
-    assert _adapt_limit(10 * 2048, 10, 0, 10000) == 10000
-
-
-def test_incremental_poller_adaptive_reads(spark, tmp_path):
-    """Adaptive mode end-to-end on the fake endpoint: the first fetch
-    goes out at the API max, then each shard's Limit re-sizes from the
-    observed average record size — growing records shrink it further —
-    while fixed mode never deviates from SHARD_GETRECORDS_MAX."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        spy = _LimitSpy(_fake_client(fk))
-        spy.create_stream(StreamName="adapt", ShardCount=1)
-
-        def put(size, n):
-            spy.put_records(
-                StreamName="adapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "adapt",
-            checkpoint_dir=str(tmp_path / "ck"),
-            boto3_client=spy,
-            interval_millis=1000,  # the reference default the sizing targets
-            use_adaptive_reads=True,
-        )
-        put(2048, 10)
-        bid, df = poller.poll()
-        poller.commit(bid)
-        assert df.count() == 10
-        # first call had no size signal -> API max; the observed 2 KiB
-        # average then sizes the budget to 2 MiB / 2 KiB = 1024
-        assert spy.limits[0] == 10000
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        put(64 * 1024, 3)  # bigger records -> limit shrinks to 32
-        bid, df = poller.poll()
-        poller.commit(bid)
-        assert df.count() == 3
-        assert spy.limits[-1] == 1024  # this poll USED the adapted limit
-        assert poller._shard_limits["shardId-000000000000"] == 32
-
-        # fixed mode (the reference's else-branch) never adapts
-        spy2 = _LimitSpy(_fake_client(fk))
-        fixed = KinesisMicroBatchPoller(
-            spark,
-            "adapt",
-            checkpoint_dir=str(tmp_path / "ck2"),
-            boto3_client=spy2,
-            interval_millis=0,
-        )
-        bid, df = fixed.poll()
-        fixed.commit(bid)
-        assert df.count() == 13
-        assert set(spy2.limits) == {10000}
-
-
-def test_executor_parallel_poller_matches_driver_poller(spark, tmp_path):
-    """VERDICT r5 #2: the executor-parallel read (mapInPandas shard
-    fan-out, staged batches) must produce IDENTICAL membership to the
-    driver-side poller on a 4-shard stream, preserve per-shard
-    sequence ordering, keep incremental semantics across polls, and
-    replay an uncommitted batch byte-identically from staging."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="par", ShardCount=4)
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="par",
-                Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
-                    for i in range(n)
-                ],
-            )
-
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        driver_poller = KinesisMicroBatchPoller(
-            spark, "par", checkpoint_dir=str(tmp_path / "drv"), **common
-        )
-        par_poller = KinesisMicroBatchPoller(
-            spark,
-            "par",
-            checkpoint_dir=str(tmp_path / "par"),
-            executor_parallel=True,
-            **common,
-        )
-
-        put("a", 40)
-        bid_d, df_d = driver_poller.poll()
-        bid_p, df_p = par_poller.poll()
-        rows_d = df_d.select("value", "shard_id", "sequence_number").collect()
-        rows_p = df_p.select("value", "shard_id", "sequence_number").collect()
-        key = lambda r: (r["shard_id"], int(r["sequence_number"]), r["value"])  # noqa: E731
-        assert sorted(map(key, rows_p)) == sorted(map(key, rows_d))
-        assert len(rows_p) == 40
-        # all 4 shards actually carried data (the fan-out is real)
-        assert len({r["shard_id"] for r in rows_p}) == 4
-        # per-shard ordering: within each shard, rows come back in
-        # ascending sequence order (one task per shard, one parquet
-        # file per task — order is preserved end to end)
-        per_shard: dict[str, list[int]] = {}
-        for r in df_p.collect():
-            per_shard.setdefault(r["shard_id"], []).append(int(r["sequence_number"]))
-        for sid, seqs in per_shard.items():
-            assert seqs == sorted(seqs), f"shard {sid} out of order: {seqs}"
-
-        # exactly-once: replay the UNCOMMITTED parallel batch — then new
-        # records arriving after the original read stay out of the replay
-        put("late", 8)
-        rbid, rdf = par_poller.poll()
-        assert rbid == bid_p
-        assert sorted(map(key, rdf.select("value", "shard_id", "sequence_number").collect())) == sorted(
-            map(key, rows_p)
-        )
-        par_poller.commit(bid_p)
-        driver_poller.commit(bid_d)
-
-        # incremental second poll picks up exactly the late records
-        bid_p2, df_p2 = par_poller.poll()
-        assert bid_p2 == bid_p + 1
-        vals = sorted(r["value"] for r in df_p2.collect())
-        assert vals == sorted(f"late-{i}" for i in range(8))
-        par_poller.commit(bid_p2)
-
-        # empty incremental poll: no new data -> zero rows, same schema
-        bid_p3, df_p3 = par_poller.poll()
-        assert df_p3.count() == 0
-        assert df_p3.columns == df_p2.columns
-
-
-def test_executor_parallel_adaptive_limit_carry(spark, tmp_path):
-    """Adaptive reads in executor-parallel mode: each shard's ledger
-    meta row carries the adapted GetRecords Limit back to the driver,
-    which seeds the NEXT poll's executor fetches — the executor-side
-    twin of the driver poller's ``_shard_limits`` carry. Executor
-    clients can't be wrapped by the test, so the Limits actually sent
-    are asserted SERVER-side via the fake endpoint's request log."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="padapt", ShardCount=1)
-
-        def put(size, n):
-            client.put_records(
-                StreamName="padapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "padapt",
-            checkpoint_dir=str(tmp_path / "ck"),
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            interval_millis=1000,  # the reference default the sizing targets
-            use_adaptive_reads=True,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        put(2048, 10)
-        bid, df = poller.poll()
-        assert df.count() == 10
-        poller.commit(bid)
-        # first-ever fetch had no size signal -> API max went out; the
-        # observed 2 KiB average sized the carry to 2 MiB / 2 KiB = 1024
-        assert fk.get_records_log[0] == ("shardId-000000000000", 10000)
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        mark = len(fk.get_records_log)
-        put(64 * 1024, 3)  # bigger records -> limit shrinks to 32
-        bid2, df2 = poller.poll()
-        assert df2.count() == 3
-        poller.commit(bid2)
-        # the second poll's first executor fetch USED the carried limit
-        assert fk.get_records_log[mark] == ("shardId-000000000000", 1024)
-        assert poller._shard_limits["shardId-000000000000"] == 32
-
-
-def test_adaptive_limit_survives_restart(spark, tmp_path):
-    """A RESTARTED adaptive poller must seed its first fetch from the
-    limits persisted in the last offsets file — not re-start at the
-    10 000-record API max and overshoot the 2 MiB/s/shard sizing (the
-    same hazard the cross-poll carry closes, at process granularity).
-    Asserted server-side via the fake endpoint's per-request Limit
-    log."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="radapt", ShardCount=1)
-
-        def put(size, n):
-            client.put_records(
-                StreamName="radapt",
-                Records=[
-                    {"Data": b"x" * size, "PartitionKey": f"k{i}"}
-                    for i in range(n)
-                ],
-            )
-
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            interval_millis=1000,
-            use_adaptive_reads=True,
-            boto3_client=client,
-        )
-        poller = KinesisMicroBatchPoller(
-            spark, "radapt", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put(2048, 10)  # 2 KiB avg -> adapted limit 2 MiB / 2 KiB = 1024
-        bid, df = poller.poll()
-        assert df.count() == 10
-        poller.commit(bid)
-        assert poller._shard_limits["shardId-000000000000"] == 1024
-
-        # fresh process: new poller over the same checkpoint
-        restarted = KinesisMicroBatchPoller(
-            spark, "radapt", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put(2048, 5)
-        mark = len(fk.get_records_log)
-        bid2, df2 = restarted.poll()
-        assert df2.count() == 5
-        restarted.commit(bid2)
-        # the restarted poller's FIRST fetch used the persisted 1024,
-        # not the 10000 API max
-        assert fk.get_records_log[mark] == ("shardId-000000000000", 1024)
-
-
-def test_executor_parallel_restart_replays_staged_without_network(
-    spark, tmp_path
-):
-    """A fresh poller over the checkpoint of a crashed-before-commit
-    executor-parallel poll must re-deliver the staged batch with its
-    ORIGINAL membership and ZERO GetRecords calls (the staging parquet
-    IS the replay source), then resume incrementally after commit."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="prestart", ShardCount=3)
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="prestart",
-                Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
-                    for i in range(n)
-                ],
-            )
-
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        poller = KinesisMicroBatchPoller(
-            spark, "prestart", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        put("a", 30)
-        bid, df = poller.poll()
-        key = lambda r: (r["shard_id"], int(r["sequence_number"]), r["value"])  # noqa: E731
-        original = sorted(
-            map(key, df.select("value", "shard_id", "sequence_number").collect())
-        )
-        assert len(original) == 30
-        # crash before commit: drop the poller, records keep arriving
-        del poller
-        put("late", 7)
-
-        restarted = KinesisMicroBatchPoller(
-            spark, "prestart", checkpoint_dir=str(tmp_path / "ck"), **common
-        )
-        mark = len(fk.get_records_log)
-        rbid, rdf = restarted.poll()
-        assert rbid == bid
-        assert (
-            sorted(
-                map(
-                    key,
-                    rdf.select(
-                        "value", "shard_id", "sequence_number"
-                    ).collect(),
-                )
-            )
-            == original
-        )
-        # zero network: the staged parquet answered the replay
-        assert len(fk.get_records_log) == mark
-        restarted.commit(rbid)
-
-        bid2, df2 = restarted.poll()
-        assert bid2 == rbid + 1
-        vals = sorted(r["value"] for r in df2.collect())
-        assert vals == sorted(f"late-{i}" for i in range(7))
-        restarted.commit(bid2)
-
-
-def test_poller_mode_interop_across_checkpoint(spark, tmp_path):
-    """A deployment can switch consumption modes over ONE checkpoint
-    (dev driver-side loop upgraded to executor-parallel, or rolled
-    back): the offsets format is shared, so each mode resumes the
-    other's committed positions incrementally, and an UNCOMMITTED
-    staged batch left by a parallel poller replays correctly from a
-    driver-mode-configured poller (staged parquet is the replay source
-    regardless of the reader's own mode)."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="interop", ShardCount=2)
-
-        def put(tag, n):
-            client.put_records(
-                StreamName="interop",
-                Records=[
-                    {
-                        "Data": _gzip.compress(f"{tag}-{i}".encode()),
-                        "PartitionKey": f"key-{i}",
-                    }
-                    for i in range(n)
-                ],
-            )
-
-        ck = str(tmp_path / "ck")
-        common = dict(
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-
-        # driver mode polls + commits wave a
-        drv = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, **common
-        )
-        put("a", 12)
-        bid_a, df_a = drv.poll()
-        assert sorted(r["value"] for r in df_a.collect()) == sorted(
-            f"a-{i}" for i in range(12)
-        )
-        drv.commit(bid_a)
-
-        # parallel mode picks up from the driver-mode checkpoint: wave
-        # b only — then crashes before commit, leaving a staged batch
-        par = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, executor_parallel=True, **common
-        )
-        put("b", 9)
-        bid_b, df_b = par.poll()
-        assert bid_b == bid_a + 1
-        original_b = sorted(r["value"] for r in df_b.collect())
-        assert original_b == sorted(f"b-{i}" for i in range(9))
-        del par
-        put("c", 5)
-
-        # rollback to driver mode: replays the parallel poller's staged
-        # uncommitted batch byte-identically, then consumes wave c
-        back = KinesisMicroBatchPoller(
-            spark, "interop", checkpoint_dir=ck, **common
-        )
-        rbid, rdf = back.poll()
-        assert rbid == bid_b
-        assert sorted(r["value"] for r in rdf.collect()) == original_b
-        back.commit(rbid)
-        bid_c, df_c = back.poll()
-        assert sorted(r["value"] for r in df_c.collect()) == sorted(
-            f"c-{i}" for i in range(5)
-        )
-        back.commit(bid_c)
-
-
-def test_executor_parallel_hot_shard_skew(spark, tmp_path):
-    """Extreme shard skew (every record on ONE partition key -> one hot
-    shard, three empty) must not lose, duplicate, or reorder anything:
-    the hot shard is a single straggler task by design — its ceiling is
-    the per-shard API limit, not the consumer — and empty shards still
-    report ledger rows so positions advance."""
-    import gzip as _gzip
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="hot", ShardCount=4)
-        recs = [
-            {
-                "Data": _gzip.compress(f"r-{i}".encode()),
-                "PartitionKey": "the-one-hot-key",
-            }
-            for i in range(1000)
-        ]
-        for i in range(0, len(recs), 500):
-            client.put_records(StreamName="hot", Records=recs[i : i + 500])
-
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "hot",
-            checkpoint_dir=str(tmp_path / "ck"),
-            region="us-east-1",
-            endpoint_url=fk.endpoint_url,
-            decode="gzip",
-            interval_millis=0,
-            executor_parallel=True,
-            client_kwargs={
-                "aws_access_key_id": "test",
-                "aws_secret_access_key": "test",
-            },
-        )
-        bid, df = poller.poll()
-        rows = df.select("value", "shard_id", "sequence_number").collect()
-        assert sorted(r["value"] for r in rows) == sorted(
-            f"r-{i}" for i in range(1000)
-        )
-        # all 1000 landed on one shard, in produce order
-        shards = {r["shard_id"] for r in rows}
-        assert len(shards) == 1
-        hot = [
-            (int(r["sequence_number"]), r["value"])
-            for r in df.collect()
-        ]
-        assert [v for _, v in sorted(hot)] == [f"r-{i}" for i in range(1000)]
-        poller.commit(bid)
-
-
-def test_checkpoint_gc_bounds_offsets_and_commits(spark, tmp_path):
-    """A continuous poller must not grow its checkpoint without bound:
-    commit(N) prunes offsets/commits below N (one file pair per poll
-    otherwise — ~86k/day at 1 poll/s), while replay keeps working: the
-    uncommitted latest batch and its predecessor's positions are always
-    retained."""
-    import os as _os
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_dev import (
-        KinesisMicroBatchPoller,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="gc", ShardCount=1)
-        ck = str(tmp_path / "ck")
-        poller = KinesisMicroBatchPoller(
-            spark,
-            "gc",
-            checkpoint_dir=ck,
-            boto3_client=client,
-            interval_millis=0,
-        )
-        for w in range(6):
-            client.put_record(
-                StreamName="gc", Data=f"w-{w}".encode(), PartitionKey="k"
-            )
-            bid, df = poller.poll()
-            assert df.count() == 1
-            poller.commit(bid)
-        # after 6 committed polls: exactly the latest offsets file and
-        # commit marker survive
-        assert _os.listdir(_os.path.join(ck, "offsets")) == ["5.json"]
-        assert _os.listdir(_os.path.join(ck, "commits")) == ["5"]
-
-        # replay across GC'd history: batch 6 polled but uncommitted,
-        # a fresh poller re-delivers it from offsets 6 + prev 5
-        client.put_record(StreamName="gc", Data=b"w-6", PartitionKey="k")
-        bid6, df6 = poller.poll()
-        assert bid6 == 6
-        restarted = KinesisMicroBatchPoller(
-            spark,
-            "gc",
-            checkpoint_dir=ck,
-            boto3_client=client,
-            interval_millis=0,
-        )
-        rbid, rdf = restarted.poll()
-        assert rbid == 6
-        assert [r["value"] for r in rdf.collect()] == ["w-6"]
-        restarted.commit(rbid)
 
 
 def test_kinesis_fixture_producer_cap_is_pinned():
@@ -1092,7 +365,7 @@ def test_kinesis_fixture_producer_cap_is_pinned():
     records driver-side (mirroring the reference's single-process
     generator, timestream_kinesis_data_gen.py:66-78) and the ONLY thing
     keeping that off the driver-bottleneck list is the event cap. Pin
-    it: the scaffold must REQUIRE an explicit keyword-only cap (no
+    it: the scaffolds must REQUIRE an explicit keyword-only cap (no
     default a new call site could silently inherit), and every catalog
     call site must stay in the low thousands."""
     import inspect
@@ -1100,9 +373,12 @@ def test_kinesis_fixture_producer_cap_is_pinned():
 
     from kda_flink_app_timestream_spark.plans import reference
 
-    sig = inspect.signature(reference._kinesis_produce_consume_roundtrip)
-    p = sig.parameters["event_cap"]
-    assert p.kind is p.KEYWORD_ONLY and p.default is p.empty
+    for scaffold in (
+        reference._kinesis_py_waves,
+        reference._produce_rendered_events_to_fake,
+    ):
+        p = inspect.signature(scaffold).parameters["event_cap"]
+        assert p.kind is p.KEYWORD_ONLY and p.default is p.empty
     caps = [
         int(m) for m in _re.findall(r"event_cap=(\d+)", inspect.getsource(reference))
     ]
@@ -1179,50 +455,36 @@ def test_kinesis_pysource_checkpoint_resume_exactly_once(spark, tmp_path):
         assert len(all_rows) == 17, f"duplicates or drops: {sorted(all_rows)}"
 
 
-def test_kinesis_pysource_read_between_offsets_exact_bounds(spark):
-    """Failure-replay contract: readBetweenOffsets(start, end) returns
-    exactly the records with start < sequence <= end per shard — the
-    bounds Spark hands back when a batch must be recomputed."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        TRIM,
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+def test_kinesis_pysource_read_between_offsets_exact_bounds():
+    """Failure-replay contract: a batch is a pure function of its
+    offset bounds. ``partitions(start, end)`` + ``read`` on a FRESH
+    reader returns exactly the records whose arrival stamps fall in
+    ``[position(start), position(end))`` per shard — the bounds Spark
+    hands back when a batch must be recomputed."""
+    with _virtual_kinesis(1_700_000_000.2) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-replay", ShardCount=1)
-        client.put_records(
-            StreamName="pysrc-replay",
-            Records=[
-                {"Data": f"r{i}".encode(), "PartitionKey": "k"} for i in range(9)
-            ],
-        )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-replay",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
-        )
+        reader = _reader(fk, "pysrc-replay")
         start = reader.initialOffset()
-        rows, end = reader.read(start)
-        rows = list(rows)
-        assert len(rows) == 9
-        shard = next(iter(end))
-        seqs = [r[3] for r in rows]  # sequenceNumber column
-        # full replay: TRIM -> end reproduces the batch exactly
-        replay = list(reader.readBetweenOffsets({shard: TRIM}, end))
-        assert [r[3] for r in replay] == seqs
-        # partial replay: after the 3rd record -> through the 7th
-        mid_start = {shard: seqs[2]}
-        mid_end = {shard: seqs[6]}
-        part = list(reader.readBetweenOffsets(mid_start, mid_end))
-        assert [r[3] for r in part] == seqs[3:7]
-        # empty window: start == end yields nothing
-        assert list(reader.readBetweenOffsets(mid_end, mid_end)) == []
+        ends = []
+        for wave in range(3):
+            for i in range(3):
+                client.put_record(
+                    StreamName="pysrc-replay",
+                    Data=f"r{3 * wave + i}".encode(),
+                    PartitionKey="k",
+                )
+            # each boundary elapses before latestOffset returns, so the
+            # next wave is stamped at or after it
+            ends.append(reader.latestOffset())
+        replayer = _reader(fk, "pysrc-replay")
+        # full replay: TRIM -> last boundary reproduces every record
+        assert _drain(replayer, start, ends[2]) == [f"r{i}" for i in range(9)]
+        # partial replays: exactly the waves between two boundaries
+        assert _drain(replayer, ends[0], ends[1]) == ["r3", "r4", "r5"]
+        assert _drain(replayer, ends[0], ends[2]) == [f"r{i}" for i in range(3, 9)]
+        # empty window: start == end plans nothing
+        assert replayer.partitions(ends[1], ends[1]) == []
 
 
 def test_kinesis_pysource_batch_plans_one_task_per_shard(spark):
@@ -1273,87 +535,68 @@ def test_kinesis_pysource_batch_plans_one_task_per_shard(spark):
         assert df.count() == 30
 
 
-def test_kinesis_pysource_reshard_retires_closed_parent(spark):
+def test_kinesis_pysource_reshard_retires_closed_parent():
     """Reshard lifecycle through the reader contract: after a
-    SplitShard, the next read() admits the children at TRIM_HORIZON and
-    tombstones the drained CLOSED parent (review finding: keeping a
-    closed shard's sequence in the offsets forever would wedge the
-    query once real retention ages it out — GetShardIterator throws on
-    every subsequent trigger). Records produced before and after the
-    split all arrive exactly once; the parent is never polled again."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        CLOSED,
-        KinesisSimpleStreamReader,
-    )
+    SplitShard, the next latestOffset tombstones the CLOSED parent with
+    its metadata end bound and tracks the children; that batch drains
+    the parent's undrained remainder and the children from TRIM, so
+    records produced before and after the split all arrive exactly
+    once; later batches never plan the parent again (keeping a closed
+    shard live in the offsets would re-request its iterator on every
+    trigger)."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import CLOSED
 
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_kinesis(1_700_000_000.2) as (_clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-reshard", ShardCount=1)
-        client.put_records(
-            StreamName="pysrc-reshard",
-            Records=[
-                {"Data": f"pre-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(5)
-            ],
-        )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-reshard",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
-        )
+
+        def put(prefix, n):
+            client.put_records(
+                StreamName="pysrc-reshard",
+                Records=[
+                    {"Data": f"{prefix}-{i}".encode(), "PartitionKey": str(i)}
+                    for i in range(n)
+                ],
+            )
+
+        put("pre", 5)
+        reader = _reader(fk, "pysrc-reshard")
         o0 = reader.initialOffset()
         parent = next(iter(o0))
-        rows1, o1 = reader.read(o0)
-        got1 = {bytes(r[0]).decode() for r in rows1}
-        assert got1 == {f"pre-{i}" for i in range(5)}
+        o1 = reader.latestOffset()
+        assert sorted(_drain(reader, o0, o1)) == [f"pre-{i}" for i in range(5)]
 
+        put("mid", 3)  # lands in the parent, undrained at the split
         client.split_shard(
             StreamName="pysrc-reshard",
             ShardToSplit=parent,
             NewStartingHashKey=str(2**127),
         )
-        client.put_records(
-            StreamName="pysrc-reshard",
-            Records=[
-                {"Data": f"post-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(6)
-            ],
-        )
-        rows2, o2 = reader.read(o1)
-        got2 = {bytes(r[0]).decode() for r in rows2}
-        assert got2 == {f"post-{i}" for i in range(6)}
-        # the parent closed and drained: tombstoned, children tracked
-        assert o2[parent].startswith(CLOSED), o2
+        put("post", 6)
+        o2 = reader.latestOffset()
+        assert o2[parent].startswith(CLOSED) and o2[parent] != CLOSED, o2
         children = [s for s in o2 if s != parent]
         assert len(children) == 2
-        # a third read never touches the parent and finds nothing new
-        rows3, o3 = reader.read(o2)
-        assert list(rows3) == []
+        assert sorted(_drain(reader, o1, o2)) == sorted(
+            [f"mid-{i}" for i in range(3)] + [f"post-{i}" for i in range(6)]
+        )
+        # a third batch never plans the parent and finds nothing new
+        o3 = reader.latestOffset()
+        assert all(p.shard_id != parent for p in reader.partitions(o2, o3))
+        assert _drain(reader, o2, o3) == []
         assert o3[parent] == o2[parent]
 
 
-def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
+def test_kinesis_pysource_latest_anchor_skips_existing_records():
     """LATEST initial position (VERDICT r8 #2): initialOffset anchors
     every shard at AT_TIMESTAMP(query start) — the only tip anchor the
     public API can replay — so records produced BEFORE the anchor never
-    arrive, records produced after all do, and the anchored first batch
-    is exactly reproducible via readBetweenOffsets (the exactly-once
-    replay contract LATEST must keep)."""
-    import time as _time
+    arrive, records produced after all do, and the anchored batch is
+    exactly reproducible from its bounds on a fresh reader (the
+    exactly-once replay contract LATEST must keep)."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import AT_TS
 
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        AT_TS,
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_kinesis(1_700_000_000.3) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-latest", ShardCount=2)
         client.put_records(
@@ -1363,28 +606,15 @@ def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
                 for i in range(8)
             ],
         )
-        _time.sleep(0.02)  # pre-anchor arrivals strictly below the anchor
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-latest",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "initialposition": "LATEST",
-            }
-        )
+        clock.sleep(0.02)
+        reader = _reader(fk, "pysrc-latest", initialposition="LATEST")
         o0 = reader.initialOffset()
         assert all(v.startswith(AT_TS) for v in o0.values()), o0
-        # nothing after the anchor yet: empty batch, anchors unchanged
-        rows0, o1 = reader.read(o0)
-        assert list(rows0) == []
+        # nothing after the anchor yet: the first boundary IS the anchor
+        # (held until it elapses), so the batch is empty
+        o1 = reader.latestOffset()
         assert o1 == o0
-        # the anchor is ceiled to a whole second (botocore truncates the
-        # Timestamp wire param to integer seconds) — produce the new
-        # wave strictly after it
-        anchor = max(int(v[len(AT_TS):]) for v in o0.values())
-        while _time.time() <= anchor:
-            _time.sleep(0.05)
+        assert _drain(reader, o0, o1) == []
         client.put_records(
             StreamName="pysrc-latest",
             Records=[
@@ -1392,190 +622,39 @@ def test_kinesis_pysource_latest_anchor_skips_existing_records(spark):
                 for i in range(5)
             ],
         )
-        rows1, o2 = reader.read(o1)
-        rows1 = list(rows1)
-        assert {bytes(r[0]).decode() for r in rows1} == {
-            f"new-{i}" for i in range(5)
-        }
+        o2 = reader.latestOffset()
+        batch = _drain(reader, o1, o2)
+        assert sorted(batch) == [f"new-{i}" for i in range(5)]
         # failure replay from the anchor reproduces the batch exactly
-        replay = list(reader.readBetweenOffsets(o1, o2))
-        assert sorted(r[3] for r in replay) == sorted(r[3] for r in rows1)
+        replay = _drain(_reader(fk, "pysrc-latest"), o1, o2)
+        assert sorted(replay) == sorted(batch)
 
 
-def test_kinesis_pysource_at_timestamp_initial_position(spark):
+def test_kinesis_pysource_at_timestamp_initial_position():
     """AT_TIMESTAMP initial position: the explicit form of the LATEST
     anchor — records at/after the given epoch arrive, earlier ones
     don't; a missing initialPositionTimestamp raises."""
-    import time as _time
-
     import pytest as _pytest
 
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
+    with _virtual_kinesis(1_700_000_000.4) as (clock, fk):
         client = _fake_client(fk)
         client.create_stream(StreamName="pysrc-atts", ShardCount=1)
-        client.put_record(
-            StreamName="pysrc-atts", Data=b"before", PartitionKey="k"
-        )
+        client.put_record(StreamName="pysrc-atts", Data=b"before", PartitionKey="k")
         # the Timestamp wire param carries integer seconds (botocore):
         # cut on a whole-second boundary strictly between the two puts
-        import math as _math
-
-        cut = _math.ceil(_time.time() + 0.01)
-        while _time.time() <= cut:
-            _time.sleep(0.05)
-        client.put_record(
-            StreamName="pysrc-atts", Data=b"after", PartitionKey="k"
+        cut = int(clock.now) + 1
+        clock.now = cut + 0.1
+        client.put_record(StreamName="pysrc-atts", Data=b"after", PartitionKey="k")
+        reader = _reader(
+            fk,
+            "pysrc-atts",
+            initialposition="AT_TIMESTAMP",
+            initialpositiontimestamp=str(cut),
         )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-atts",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "initialposition": "AT_TIMESTAMP",
-                "initialpositiontimestamp": str(cut),
-            }
-        )
-        rows, _end = reader.read(reader.initialOffset())
-        assert [bytes(r[0]).decode() for r in rows] == ["after"]
+        start = reader.initialOffset()
+        assert _drain(reader, start, reader.latestOffset()) == ["after"]
         with _pytest.raises(ValueError, match="initialPositionTimestamp"):
-            KinesisSimpleStreamReader(
-                {
-                    "streamname": "pysrc-atts",
-                    "endpointurl": fk.endpoint_url,
-                    "initialposition": "AT_TIMESTAMP",
-                }
-            ).initialOffset()
-
-
-def test_kinesis_pysource_expired_sequence_falls_back_to_trim(caplog):
-    """ADVICE r8: a committed sequence the service no longer accepts
-    (aged past stream retention during query downtime) must not wedge
-    the query on every trigger — the reader falls back to TRIM_HORIZON
-    and logs the data-loss window (real-connector behavior)."""
-    import logging
-
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="pysrc-expired", ShardCount=1)
-        client.put_records(
-            StreamName="pysrc-expired",
-            Records=[
-                {"Data": f"r{i}".encode(), "PartitionKey": "k"} for i in range(4)
-            ],
-        )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-expired",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-            }
-        )
-        shard = next(iter(reader.initialOffset()))
-        # a sequence the service never issued -> InvalidArgumentException
-        # from GetShardIterator (the same error an expired one raises)
-        with caplog.at_level(
-            logging.WARNING,
-            logger="kda_flink_app_timestream_spark.streaming.kinesis_pysource",
-        ):
-            rows, end = reader.read({shard: "999999"})
-        rows = list(rows)
-        assert {bytes(r[0]).decode() for r in rows} == {f"r{i}" for i in range(4)}
-        assert any("TRIM_HORIZON" in r.message for r in caplog.records)
-        # recovery is once, not per-trigger: the next read continues
-        # from the re-established concrete sequence with no new warning
-        caplog.clear()
-        rows2, _ = reader.read(end)
-        assert list(rows2) == []
-        assert not caplog.records
-
-
-def test_kinesis_pysource_child_deferred_while_parent_undrained():
-    """ADVICE r8 (parent-before-child admission): with maxPagesPerBatch
-    capping a batch, a post-reshard child must NOT be admitted while
-    its closed parent still has undrained records — otherwise a key's
-    child-shard records could land in an earlier batch than the
-    parent's remainder. The child stays at TRIM until the parent
-    tombstones CLOSED, then drains; every record arrives exactly once
-    and parent records all precede child records in batch order."""
-    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
-        CLOSED,
-        TRIM,
-        KinesisSimpleStreamReader,
-    )
-
-    from .fake_kinesis import FakeKinesis
-
-    with FakeKinesis() as fk:
-        client = _fake_client(fk)
-        client.create_stream(StreamName="pysrc-defer", ShardCount=1)
-        client.put_records(
-            StreamName="pysrc-defer",
-            Records=[
-                {"Data": f"pre-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(6)
-            ],
-        )
-        reader = KinesisSimpleStreamReader(
-            {
-                "streamname": "pysrc-defer",
-                "endpointurl": fk.endpoint_url,
-                "accesskeyid": "test",
-                "secretaccesskey": "test",
-                "maxfetchrecordspershard": "2",  # 3 pages of parent backlog
-                "maxpagesperbatch": "1",  # page-capped triggers
-            }
-        )
-        o0 = reader.initialOffset()
-        parent = next(iter(o0))
-        client.split_shard(
-            StreamName="pysrc-defer",
-            ShardToSplit=parent,
-            NewStartingHashKey=str(2**127),
-        )
-        client.put_records(
-            StreamName="pysrc-defer",
-            Records=[
-                {"Data": f"post-{i}".encode(), "PartitionKey": str(i)}
-                for i in range(3)
-            ],
-        )
-        # drive page-capped batches to a fixpoint, recording arrival order
-        arrivals: list[str] = []
-        offsets = o0
-        for _ in range(12):
-            rows, offsets = reader.read(offsets)
-            batch = [bytes(r[0]).decode() for r in rows]
-            arrivals.extend(batch)
-            children = [s for s in offsets if s != parent]
-            if not offsets[parent].startswith(CLOSED):
-                # parent undrained: children exist but stay unadmitted
-                assert all(offsets[c] == TRIM for c in children), offsets
-                assert not any(b.startswith("post-") for b in batch), batch
-            if len(arrivals) == 9 and offsets[parent].startswith(CLOSED):
-                break
-        assert sorted(arrivals) == sorted(
-            [f"pre-{i}" for i in range(6)] + [f"post-{i}" for i in range(3)]
-        )
-        # ordering: every parent record precedes every child record
-        last_pre = max(i for i, b in enumerate(arrivals) if b.startswith("pre-"))
-        first_post = min(
-            i for i, b in enumerate(arrivals) if b.startswith("post-")
-        )
-        assert last_pre < first_post, arrivals
+            _reader(fk, "pysrc-atts", initialposition="AT_TIMESTAMP").initialOffset()
 
 
 def test_kinesis_pysource_partitioned_one_task_per_shard(spark, tmp_path):
@@ -1972,17 +1051,129 @@ def test_kinesis_pysource_partitioned_rejects_pre_v2_offsets():
     """A bare-sequence end offset (the r9 sequence-bounds checkpoint
     format) must fail loudly: silently skipping it would commit an
     EMPTY batch over a pending pre-upgrade replay and lose its records
-    forever."""
+    forever. A bare-sequence start has no iterator position either
+    (only TRIM_HORIZON and AT_TIMESTAMP anchors do) and fails the same
+    way."""
     import pytest as _pytest
 
     from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
         AT_TS,
+        CLOSED,
         KinesisPartitionedStreamReader,
+        _get_iterator,
     )
 
     reader = KinesisPartitionedStreamReader({"streamname": "x"})
     with _pytest.raises(ValueError, match="fresh checkpoint"):
         reader.partitions({"s": AT_TS + "100"}, {"s": "17"})
+    # a bare-sequence START (a checkpoint written by a reader that kept
+    # last-read sequence numbers) is refused when the batch is planned,
+    # for open and closing shards alike — and by the executor-side
+    # iterator request, before any call reaches the service
+    for end in (AT_TS + "100", CLOSED + "42"):
+        with _pytest.raises(ValueError, match="fresh checkpoint"):
+            reader.partitions({"s": "17"}, {"s": end})
+    with _pytest.raises(ValueError, match="fresh checkpoint"):
+        _get_iterator(None, "x", "s", "17")
+
+
+def test_kinesis_pysource_reader_option_accepts_only_partitioned():
+    """The partitioned reader is the only streaming reader: the old
+    explicit opt-in ``reader=partitioned`` still works, any other
+    value fails instead of silently running a mode the caller did not
+    ask for."""
+    import pytest as _pytest
+
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import (
+        KinesisPartitionedStreamReader,
+        KinesisPythonDataSource,
+    )
+
+    opts = {"streamName": "x", "reader": "Partitioned"}
+    assert isinstance(
+        KinesisPythonDataSource(opts).streamReader(None),
+        KinesisPartitionedStreamReader,
+    )
+    with _pytest.raises(ValueError, match="one streaming reader"):
+        KinesisPythonDataSource({"streamName": "x", "reader": "simple"}).streamReader(
+            None
+        )
+
+
+def test_kinesis_pysource_stall_guard(monkeypatch):
+    """A throttled endpoint that keeps returning empty pages with no
+    MillisBehindLatest progress must fail a shard's drain LOUDLY —
+    never spin forever — in the streaming and the batch reader alike
+    (neither commits anything, so a retried task re-reads the same
+    range)."""
+    from kda_flink_app_timestream_spark.streaming import kinesis_pysource as kps
+
+    class StuckClient:
+        calls = 0
+
+        def get_shard_iterator(self, **kw):
+            return {"ShardIterator": "it0"}
+
+        def get_records(self, **kw):
+            StuckClient.calls += 1
+            return {
+                "Records": [],
+                "NextShardIterator": "it0",
+                "MillisBehindLatest": 5000,  # forever behind, never progresses
+            }
+
+    monkeypatch.setattr(kps, "_client", lambda options: StuckClient())
+    shard = "shardId-000000000000"
+    drains = [
+        kps.KinesisPartitionedStreamReader({"streamName": "stuck"}).read(
+            kps.ShardRangePartition(shard, kps.TRIM, kps.AT_TS + "1700000000")
+        ),
+        kps.KinesisBatchReader({"streamName": "stuck"}).read(
+            kps.ShardPartition(shard)
+        ),
+    ]
+    for drain in drains:
+        StuckClient.calls = 0
+        with pytest.raises(RuntimeError, match="stalled"):
+            list(drain)
+        assert StuckClient.calls == kps._MAX_STALLED_PAGES + 2
+
+
+def test_kinesis_pysource_partitioned_hot_shard_skew():
+    """Extreme shard skew (every record on ONE partition key -> one hot
+    shard, three empty) must not lose, duplicate, or reorder anything:
+    the hot shard is a single straggler task by design — its ceiling is
+    the per-shard API limit, not the consumer — and the empty shards'
+    offsets still advance with every boundary."""
+    from kda_flink_app_timestream_spark.streaming.kinesis_pysource import AT_TS
+
+    with _virtual_kinesis(1_700_000_000.2) as (_clock, fk):
+        client = _fake_client(fk)
+        client.create_stream(StreamName="pysrc-hot", ShardCount=4)
+        reader = _reader(fk, "pysrc-hot", maxfetchrecordspershard="7")
+        offsets = reader.initialOffset()
+        got: list[str] = []
+        for wave in range(2):
+            client.put_records(
+                StreamName="pysrc-hot",
+                Records=[
+                    {"Data": f"h{wave}-{i:02d}".encode(), "PartitionKey": "hot"}
+                    for i in range(20)
+                ],
+            )
+            end = reader.latestOffset()
+            assert len(end) == 4 and all(
+                pos == AT_TS + str(reader._last_boundary) for pos in end.values()
+            ), end
+            parts = reader.partitions(offsets, end)
+            per_shard = {
+                p.shard_id: [bytes(r[0]).decode() for r in reader.read(p)]
+                for p in parts
+            }
+            assert sum(1 for rows in per_shard.values() if rows) == 1, per_shard
+            got.extend(r for rows in per_shard.values() for r in rows)
+            offsets = end
+        assert got == [f"h{w}-{i:02d}" for w in range(2) for i in range(20)]
 
 
 def test_kinesis_pysource_partitioned_latestoffset_is_metadata_only():
